@@ -1312,7 +1312,9 @@ FP_MIN_SUPPORT = 0.01
                3 AS set_size, CAST(COUNT(*) AS BIGINT) AS freq
         FROM b a
         JOIN b c ON c.l_orderkey = a.l_orderkey AND c.p_brand > a.p_brand
-        JOIN b d ON d.l_orderkey = a.l_orderkey AND d.p_brand > c.p_brand
+        -- d joins c (not a) on the key: DuckDB then hash-joins instead of
+        -- a piecewise merge join on the brand inequality
+        JOIN b d ON d.l_orderkey = c.l_orderkey AND d.p_brand > c.p_brand
         GROUP BY a.p_brand, c.p_brand, d.p_brand
     ),
     u AS (

@@ -22,6 +22,17 @@ turns "a directory of parquet" into a TABLE with ACID semantics:
   prunes non-overlapping files BEFORE Spark ever lists them — the file-level
   analog of row-group pruning, and what makes sorted/z-ordered layouts pay
   off at 100 TB (planning cost is O(log), not O(data)).
+- **Log-resolved schemas.** Each add action carries ``schema_id``, the
+  content hash of the schema its file was written with; commits log the
+  schema string and checkpoints carry the id -> schema map of their live
+  files, so resolving a snapshot's schema costs the same checkpoint-plus-
+  tail replay as its file list. When every scanned file shares one id,
+  readers (``read``, ``read_incremental``, the pruned MERGE's base slice)
+  pass that schema to Spark instead of inferring it, which saves the
+  parquet footer-merge job (Delta readers likewise take the schema from
+  the log). Files with different ids (an evolved table), or an id the map
+  cannot resolve (a legacy log or checkpoint), fall back to a
+  ``mergeSchema`` read.
 - **Compaction.** ``compact`` rewrites small files into big ones in a new
   version with identical rows — time travel to pre-compaction versions still
   works because the old files stay on disk until a retention vacuum.
@@ -48,13 +59,27 @@ primitive is atomic create-if-absent, which every production store provides.
 from __future__ import annotations
 
 import datetime as _dt
+import hashlib
 import json
 import os
+import re
 import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    ByteType,
+    DateType,
+    DecimalType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructType,
+    TimestampType,
+)
 
 LOG_DIR = "_txn_log"
 CHECKPOINT_EVERY = 10
@@ -103,11 +128,48 @@ def _canon_stat(v):
     return v
 
 
+# Footer stats of a TimestampType column are UTC-aware ("... +00:00"), of a
+# TimestampNTZ column naive: _canon_stat keeps pyarrow's form.
+_AWARE_TS = re.compile(r"\d \d\d:\d\d:\d\d(\.\d+)?[+-]\d\d:\d\d$")
+_NAIVE_TS = re.compile(r"\d \d\d:\d\d:\d\d(\.\d+)?$")
+
+
+def _stat_form(stat_value) -> str:
+    if isinstance(stat_value, str):
+        if _AWARE_TS.search(stat_value):
+            return "aware"
+        if _NAIVE_TS.search(stat_value):
+            return "naive"
+    return "plain"
+
+
+def _canon_probe(v, form: str):
+    """A probe key or read bound in the canonical form of stats of ``form``
+    (see ``_stat_form``), so that the two compare by value, not by string
+    shape. A naive datetime means LOCAL wall-clock time — what ``collect()``
+    yields for TimestampType and what PySpark makes of a naive literal — so
+    against aware stats it converts to UTC. A temporal probe that has no
+    exact place among the stats (a date against timestamp stats, any
+    datetime against date stats, an aware datetime against NTZ stats) maps
+    to None, which callers treat as "may overlap": the file is kept."""
+    if isinstance(v, _dt.date) and hasattr(v, "to_pydatetime"):
+        v = v.to_pydatetime()  # pandas.Timestamp: astimezone on naive raises
+    if not isinstance(v, _dt.date):
+        return _canon_stat(v)
+    is_dt = isinstance(v, _dt.datetime)
+    if form == "aware":
+        return v.astimezone(_dt.timezone.utc).isoformat(sep=" ") if is_dt else None
+    if form == "naive":
+        return v.isoformat(sep=" ") if is_dt and v.tzinfo is None else None
+    return None if is_dt else _canon_stat(v)
+
+
 def _overlaps(stat: list, lo, hi) -> bool:
     """File [min,max] vs probe [lo,hi], with bounds normalized to the stored
     canonical form. Incomparable types keep the file — pruning is an
     optimization, never a correctness dependency."""
-    lo, hi = _canon_stat(lo), _canon_stat(hi)
+    form = _stat_form(stat[0])
+    lo, hi = _canon_probe(lo, form), _canon_probe(hi, form)
     try:
         return not (stat[1] < lo or stat[0] > hi)
     except TypeError:
@@ -151,8 +213,6 @@ def _bloom_positions(value, m: int, k: int) -> list[int]:
     probe into a false 'definitely absent' (a wrong answer, not a missed
     prune). Collapsing >2^53 ints onto floats only merges hash inputs,
     which for a Bloom filter is a false positive: safe."""
-    import hashlib
-
     v = _canon_stat(value)
     if isinstance(v, (int, float)) and not isinstance(v, bool):
         v = float(v)
@@ -192,6 +252,10 @@ def _file_bloom(full_path: str, bloom_cols: list[str]) -> dict[str, dict]:
 
 
 def _bloom_might_contain(bloom: dict, value) -> bool:
+    if isinstance(value, _dt.datetime):
+        # stored timestamps hash in their footer form (UTC-aware for
+        # TimestampType, naive for NTZ); a probe's form is not known here
+        return True
     bits = bytes.fromhex(bloom["bits"])
     for p in _bloom_positions(value, bloom["m"], bloom["k"]):
         if not bits[p // 8] & (1 << (p % 8)):
@@ -219,6 +283,11 @@ def _file_size(path: str, f: dict) -> int:
     return os.path.getsize(full) if os.path.exists(full) else 0
 
 
+def _schema_id(schema_json: str) -> str:
+    """Content id of a logged schema string: equal ids, equal schemas."""
+    return hashlib.sha1(schema_json.encode()).hexdigest()[:16]
+
+
 def _stage_files(
     df: DataFrame,
     path: str,
@@ -226,7 +295,9 @@ def _stage_files(
     bloom_cols: list[str] | None = None,
 ) -> list[dict]:
     """Write df's partitions as uniquely-named parquet files in the table dir
-    (invisible until a log entry lists them); return add-actions with stats."""
+    (invisible until a log entry lists them); return add-actions with stats,
+    each tagged with the id of the schema it was written with."""
+    schema_id = _schema_id(df.schema.json())
     staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
     # INT96 (Spark's legacy default) carries no footer stats — force the
     # stats-capable MICROS encoding so temporal stat_cols actually skip,
@@ -247,6 +318,7 @@ def _stage_files(
             "file": name,
             "bytes": os.path.getsize(full),
             "stats": _file_stats(full, stat_cols),
+            "schema_id": schema_id,
         }
         if bloom_cols:
             add["bloom"] = _file_bloom(full, bloom_cols)
@@ -326,11 +398,18 @@ def _commit(
         with os.fdopen(fd, "w") as f:
             json.dump(entry, f, default=str)  # datetime/decimal stats -> ISO strings
         if version and version % CHECKPOINT_EVERY == 0:
-            files = snapshot_files(path, version)
+            files, schemas = _snapshot(path, version)
             cp = os.path.join(_log_dir(path), f"_checkpoint-{version:020d}.json")
             cp_body = {
                 "version": version,
                 "files": files,
+                # the schemas the live files were written with, so readers
+                # resolve them from the checkpoint plus the tail only
+                "schemas": {
+                    i: schemas[i]
+                    for i in {a.get("schema_id") for a in files}
+                    if i in schemas
+                },
                 # fold DV state so snapshot_dv's backward walk stops
                 # at the checkpoint instead of replaying to v0
                 "dv": snapshot_dv(path, version),
@@ -354,9 +433,17 @@ def _commit(
 def snapshot_files(path: str, version: int | None = None) -> list[dict]:
     """Fold the log into the live file list at ``version`` (default: latest).
     Replays from the newest checkpoint at or below ``version``, then the tail."""
+    return _snapshot(path, version)[0]
+
+
+def _snapshot(path: str, version: int | None = None) -> tuple[list[dict], dict[str, str]]:
+    """``snapshot_files`` plus the schema-id -> schema map of the same replay:
+    the checkpoint's map and every schema the tail logs. An id missing from
+    the map (legacy checkpoint, commit logging no schema) makes ``_scan``
+    fall back to a footer merge."""
     versions = _list_versions(path)
     if not versions:
-        return []
+        return [], {}
     if version is None:
         version = versions[-1]
     if version not in versions:
@@ -368,11 +455,14 @@ def snapshot_files(path: str, version: int | None = None) -> list[dict]:
         if f.startswith("_checkpoint-") and f.endswith(".json")
     )
     live: dict[str, dict] = {}
+    schemas: dict[str, str] = {}
     start = 0
     usable = [v for v in cp_versions if v <= version]
     if usable:
         with open(os.path.join(d, f"_checkpoint-{usable[-1]:020d}.json")) as f:
-            live = {a["file"]: a for a in json.load(f)["files"]}
+            body = json.load(f)
+        live = {a["file"]: a for a in body["files"]}
+        schemas = body.get("schemas", {})
         start = usable[-1] + 1
     for v in versions:
         if v < start or v > version:
@@ -382,7 +472,24 @@ def snapshot_files(path: str, version: int | None = None) -> list[dict]:
             live.pop(rm, None)
         for add in e.get("add", []):
             live[add["file"]] = add
-    return list(live.values())
+        if e.get("schema"):
+            schemas[_schema_id(e["schema"])] = e["schema"]
+    return list(live.values()), schemas
+
+
+def _scan(spark: SparkSession, path: str, files: list[dict], schemas: dict[str, str]) -> DataFrame:
+    """Read data files with the schema the log recorded for them when they
+    were all written with one schema: no footer-merge job, and the same
+    schema a merged read infers (file sources make every field nullable).
+    Files written with different schemas, or with no resolvable id, are
+    read with ``mergeSchema`` as before."""
+    ids = {a.get("schema_id") for a in files}
+    logged = schemas.get(ids.pop()) if len(ids) == 1 else None
+    if logged:
+        reader = spark.read.schema(StructType.fromJson(json.loads(logged)))
+    else:
+        reader = spark.read.option("mergeSchema", "true")
+    return reader.parquet(*[_data_path(path, a) for a in files])
 
 
 def snapshot_dv(path: str, version: int | None = None) -> str | None:
@@ -684,7 +791,7 @@ def compact(spark: SparkSession, path: str, stat_cols: list[str] | None = None) 
     adds = _stage_files(df.coalesce(max(1, len(current) // 8)), path, stat_cols or [])
     return _commit(
         path,
-        {"operation": "compact", "add": adds,
+        {"operation": "compact", "add": adds, "schema": df.schema.json(),
          "remove": [a["file"] for a in current], "dv": None, "renames_set": []},
         read_version=rv,
     )
@@ -844,7 +951,7 @@ def read(
         if version is not None:
             raise ValueError("pass either version or as_of, not both")
         version = version_at(path, as_of)
-    files = snapshot_files(path, version)
+    files, schemas = _snapshot(path, version)
     if between is not None:
         col, lo, hi = between
         files = [
@@ -874,13 +981,9 @@ def read(
             schema = _read_entry(path, v).get("schema")
             if schema:
                 break
-        from pyspark.sql.types import StructType
-
         empty = spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
         return _apply_renames(empty, snapshot_renames(path, version))
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[_data_path(path, a) for a in files]
-    )
+    df = _scan(spark, path, files, schemas)
     dv = snapshot_dv(path, version)
     if dv:
         df = _apply_dv(spark, df, path, dv)
@@ -1214,6 +1317,16 @@ def merge_upsert(
     return _commit(path, actions, read_version=rv)
 
 
+# Key types whose collected Python values round-trip exactly into literals
+# (timestamps once made UTC-aware). The filter form costs one py4j literal
+# per key, so large key sets keep the anti-join.
+_ISIN_TYPES = (
+    BooleanType, ByteType, ShortType, IntegerType, LongType, DecimalType,
+    StringType, DateType, TimestampType,
+)
+_ISIN_MAX_KEYS = 1024
+
+
 def merge_upsert_pruned(
     spark: SparkSession,
     updates: DataFrame,
@@ -1238,20 +1351,24 @@ def merge_upsert_pruned(
       the updates (two scalars from a 1-row aggregate).
     - file without stats, or incomparable types: conservatively touched.
 
-    Touched files are re-read, anti-joined on the keys, unioned with the
-    updates, and re-staged; the commit removes exactly the touched files.
-    Untouched files survive by NOT being named — no data movement, no
-    rewrite. Correctness never depends on the stats: a file that could
+    Touched files are re-read, stripped of the update keys, unioned with
+    the updates, and re-staged; the commit removes exactly the touched
+    files. Untouched files survive by NOT being named — no data movement,
+    no rewrite. Correctness never depends on the stats: a file that could
     contain a matching key is always classified touched, and the result is
     row-identical to ``merge_upsert`` (pinned in tests/test_tablog.py).
+
+    ``updates`` is evaluated once: it is persisted for the call, and one
+    bounded key collect answers emptiness, the all-NULL case and the probe
+    set, so classification and the written rows come from the same
+    evaluation (Delta's MERGE materializes its source for the same reason).
 
     On a date-range-clustered 100 TB table, a CDC batch touching one day
     rewrites that day's files only — the difference between a merge that
     costs minutes and one that re-shuffles the lake.
     """
     from bisect import bisect_left
-
-    from pyspark.sql import functions as F
+    from functools import lru_cache
 
     if batch_id is not None and batch_id in committed_batch_ids(path):
         return None
@@ -1263,62 +1380,81 @@ def merge_upsert_pruned(
         return merge_upsert(spark, updates, path, key_cols, stat_cols, batch_id)
     key = key_cols[0]
     rv = current_version(path)
-    files = snapshot_files(path, rv)
-    lo, hi, n_keys, n_rows = updates.agg(
-        F.min(key), F.max(key), F.count_distinct(key), F.count(F.lit(1))
-    ).first()
-    if n_rows == 0:  # empty update set: MERGE is a no-op, commit nothing
-        return None
-    if lo is None:
-        # every update key is NULL: NULL never equals any stored key, so no
-        # file can match — the whole batch is inserts (merge_upsert would
-        # append them all; min(key) being NULL must not silently no-op)
-        adds = _stage_files(updates, path, stat_cols or [])
-        actions = {"operation": "merge_pruned", "add": adds, "remove": [],
-                   "schema": updates.schema.json()}
-        if batch_id is not None:
-            actions["batch_id"] = batch_id
-        return _commit(path, actions, read_version=rv)
-
-    if n_keys <= max_probe_keys:
+    files, schemas = _snapshot(path, rv)
+    updates = updates.persist()
+    try:
+        # a batch of at most max_probe_keys rows yields its keys without the
+        # shuffle of a distinct (dedup by repr: key values may be unhashable)
+        rows = updates.select(key).limit(max_probe_keys + 1).collect()
+        if len(rows) > max_probe_keys:
+            rows = updates.select(key).distinct().limit(max_probe_keys + 1).collect()
+        keys = list({repr(r[0]): r[0] for r in rows}.values())
+        if not keys:  # empty update set: MERGE is a no-op, commit nothing
+            return None
+        probed = len(keys) <= max_probe_keys
         # NULL keys can't match stored rows — probe only the non-null keys
         # (sorted() would TypeError on a None among comparables otherwise)
-        probe = sorted(
-            _canon_stat(r[0])
-            for r in updates.select(key).distinct().collect()
-            if r[0] is not None
-        )
+        keys = [k for k in keys if k is not None]
+        # every update key NULL: NULL never equals any stored key, so no file
+        # can match — the whole batch is inserts (merge_upsert would append
+        # them all)
+        touched = []
+        if keys or not probed:
+            key_type = updates.schema[key].dataType
+            if isinstance(key_type, TimestampType):
+                # collect() gives naive LOCAL datetimes; as aware UTC they
+                # compare with the UTC-aware footer stats and make exact
+                # literals on any driver time zone (DST folds included)
+                keys = [k.astimezone(_dt.timezone.utc) for k in keys]
+            if probed:
 
-        def hits(stat: list) -> bool:
-            try:
-                i = bisect_left(probe, stat[0])
-                return i < len(probe) and probe[i] <= stat[1]
-            except TypeError:
-                return True  # incomparable -> conservatively touched
+                @lru_cache(maxsize=None)
+                def probe_in(form: str) -> list | None:
+                    canon = [_canon_probe(k, form) for k in keys]
+                    return None if None in canon else sorted(canon)
 
-    else:
+                def hits(stat: list) -> bool:
+                    try:
+                        probe = probe_in(_stat_form(stat[0]))
+                        i = bisect_left(probe, stat[0])
+                        return i < len(probe) and probe[i] <= stat[1]
+                    except TypeError:
+                        return True  # incomparable -> conservatively touched
 
-        def hits(stat: list) -> bool:
-            return _overlaps(stat, lo, hi)
+            else:
+                lo, hi = updates.agg(F.min(key), F.max(key)).first()
 
-    touched = [
-        a for a in files
-        if a.get("stats", {}).get(key) is None or hits(a["stats"][key])
-    ]
-    if touched:
-        base_slice = spark.read.option("mergeSchema", "true").parquet(
-            *[_data_path(path, a) for a in touched]
-        )
-        # pre-rename files carry OLD physical column names; without the
-        # replay the anti-join key would read as NULL there and matching
-        # base rows would survive next to their updates (silent duplicates)
-        base_slice = _apply_renames(base_slice, snapshot_renames(path, rv))
-        merged = base_slice.join(
-            updates.select(*key_cols), key_cols, "left_anti"
-        ).unionByName(updates, allowMissingColumns=True)
-    else:
+                def hits(stat: list) -> bool:
+                    return _overlaps(stat, lo, hi)
+
+            touched = [
+                a for a in files
+                if a.get("stats", {}).get(key) is None or hits(a["stats"][key])
+            ]
         merged = updates
-    adds = _stage_files(merged, path, stat_cols or [])
+        if touched:
+            base_slice = _scan(spark, path, touched, schemas)
+            # pre-rename files carry OLD physical column names; without the
+            # replay the key would read as NULL there and matching base rows
+            # would survive next to their updates (silent duplicates)
+            base_slice = _apply_renames(base_slice, snapshot_renames(path, rv))
+            if (
+                probed
+                and len(key_cols) == 1
+                and len(keys) <= _ISIN_MAX_KEYS
+                and isinstance(key_type, _ISIN_TYPES)
+                and isinstance(base_slice.schema[key].dataType, _ISIN_TYPES)
+            ):
+                # the keys are already on the driver: a filter drops the
+                # matched rows without a join (NULL keys never match)
+                k = F.col(key)
+                kept = base_slice.filter(k.isNull() | ~k.isin(keys))
+            else:
+                kept = base_slice.join(updates.select(*key_cols), key_cols, "left_anti")
+            merged = kept.unionByName(updates, allowMissingColumns=True)
+        adds = _stage_files(merged, path, stat_cols or [])
+    finally:
+        updates.unpersist()
     actions = {
         "operation": "merge_pruned",
         "add": adds,
@@ -1432,13 +1568,11 @@ def read_incremental(
     if since_version is None:
         return read(spark, path), tip
     prev = {a["file"] for a in snapshot_files(path, since_version)}
-    now = snapshot_files(path, tip)
+    now, schemas = _snapshot(path, tip)
     new_files = [a for a in now if a["file"] not in prev]
     if not new_files:
         return None, tip
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[_data_path(path, a) for a in new_files]
-    )
+    df = _scan(spark, path, new_files, schemas)
     # change-feed consumers key on logical names; new files may still
     # predate a rename (e.g. a publish_branch of an older branch)
     return _apply_renames(df, snapshot_renames(path, tip)), tip

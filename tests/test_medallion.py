@@ -297,3 +297,60 @@ def test_incremental_update_matches_full_rebuild(spark, tmp_path_factory):
     # silver history untouched: every pre-update file still in the snapshot
     files_after = {a["file"] for a in T.snapshot_files(silver_path)}
     assert files_before <= files_after and len(files_after) > len(files_before)
+
+
+def test_incremental_batches_alternating_days_match_full_rebuild(spark, tmp_path_factory):
+    """Late batches alternating recent and old days — including extra
+    samples for the first day, the min of its gold file — keep exactly one
+    gold row per dt after every batch and end equal to a full rebuild over
+    the union of inputs. Every warehouse table then reads with the schema a
+    footer-merged read infers (names, order, types, nullability)."""
+    from gpu_telemetry_lakehouse_spark import tablog as T
+    from gpu_telemetry_lakehouse_spark.flow import incremental_update
+    from gpu_telemetry_lakehouse_spark.schemas import MACHINE_METRICS
+
+    base_rows = _machine_metric_rows(5)
+    batches = [
+        _machine_metric_rows(5, start_day=4, ks=range(4, 6)),  # recent day
+        _machine_metric_rows(1, start_day=0, ks=range(4, 6)),  # first day
+        _machine_metric_rows(6, start_day=5),  # new day
+        _machine_metric_rows(3, start_day=2, ks=range(6, 8)),  # old day
+    ]
+    inc_lake = str(tmp_path_factory.mktemp("alt_inc_lake"))
+    full_refresh(
+        spark, write_sources(tmp_path_factory.mktemp("alt_inc_src"), metric_rows=base_rows), inc_lake
+    )
+    for rows_ in batches:
+        inc = incremental_update(
+            spark, inc_lake, spark.createDataFrame(pd.DataFrame(rows_), schema=MACHINE_METRICS)
+        )
+        gold = inc["gold_cluster_util_daily"]
+        assert gold.count() == gold.select("dt").distinct().count()
+
+    union = base_rows + [r for b in batches for r in b]
+    want = full_refresh(
+        spark,
+        write_sources(tmp_path_factory.mktemp("alt_full_src"), metric_rows=union),
+        str(tmp_path_factory.mktemp("alt_full_lake")),
+    )
+
+    def rows(df, cols):
+        return sorted(df.select(*cols).collect())
+
+    gold_cols = ["dt", "avg_gpu_util", "p95_gpu_util", "avg_cpu_util"]
+    assert rows(inc["gold_cluster_util_daily"], gold_cols) == rows(
+        want["gold_cluster_util_daily"], gold_cols
+    )
+    assert inc["gold_cluster_util_daily"].count() == 6
+    scored_cols = gold_cols + ["anomaly_flag"]
+    assert rows(inc["gold_cluster_util_daily_scored"], scored_cols) == rows(
+        want["gold_cluster_util_daily_scored"], scored_cols
+    )
+
+    wh = os.path.join(inc_lake, "warehouse")
+    for name in sorted(os.listdir(wh)):
+        path = os.path.join(wh, name)
+        merged = spark.read.option("mergeSchema", "true").parquet(
+            *[T._data_path(path, a) for a in T.snapshot_files(path)]
+        )
+        assert T.read(spark, path).schema == merged.schema, name

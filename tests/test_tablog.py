@@ -1957,3 +1957,194 @@ def test_version_at_checkpoint_fold_equals_checkpoint_free_replay(spark, sf_dir,
         assert T.version_at(tbl, effs[deep]) == deep
     assert spy.call_count <= T.CHECKPOINT_EVERY + 1, spy.call_count
     assert len(cp_opens) <= n_cps, cp_opens
+
+
+# --- timestamp keys and bounds vs footer stats --------------------------------
+
+
+def _day_expr(day: int, ntz: bool) -> str:
+    e = f"timestamp_seconds({1_700_000_000 // 86400 * 86400 + day * 86400})"
+    return f"to_timestamp_ntz({e})" if ntz else e
+
+
+def _day_files(spark, path, ntz: bool, days: int = 4):
+    """One commit (so one [d, d] stat range) per day, keyed on ``dt``: a
+    TimestampType column (UTC-aware footer stats) or a TimestampNTZ one
+    (naive stats)."""
+    for day in range(days):
+        df = spark.range(1, numPartitions=1).selectExpr(
+            f"{_day_expr(day, ntz)} AS dt", f"{day}.0D AS v"
+        )
+        (T.create_table if day == 0 else T.append)(df, path, stat_cols=["dt"])
+
+
+@pytest.fixture(params=["UTC", "America/New_York"])
+def driver_tz(request):
+    """Run under a given driver (Python) time zone: collected TimestampType
+    values and naive literals are local wall-clock times there."""
+    import time
+
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = request.param
+    time.tzset()
+    yield request.param
+    if old is None:
+        os.environ.pop("TZ", None)
+    else:
+        os.environ["TZ"] = old
+    time.tzset()
+
+
+@pytest.mark.parametrize("ntz", [False, True], ids=["timestamp", "timestamp_ntz"])
+def test_pruned_merge_timestamp_key_at_file_min_matches_unpruned(spark, tmp_path, ntz, driver_tz):
+    """A [d, d] file whose only update key is d must be rewritten. The
+    collected key is a naive datetime and the footer stat UTC-aware: unless
+    they compare by value, the file is skipped and the day keeps two rows."""
+    p1, p2 = str(tmp_path / "pruned"), str(tmp_path / "plain")
+    _day_files(spark, p1, ntz)
+    _day_files(spark, p2, ntz)
+    upd = spark.range(1).selectExpr(f"{_day_expr(1, ntz)} AS dt", "-1.0D AS v")
+    T.merge_upsert_pruned(spark, upd, p1, ["dt"], stat_cols=["dt"])
+    T.merge_upsert(spark, upd, p2, ["dt"], stat_cols=["dt"])
+    got = sorted(T.read(spark, p1).collect())
+    assert got == sorted(T.read(spark, p2).collect())
+    assert len(got) == 4 and len({r.dt for r in got}) == 4
+    assert sorted(r.v for r in got) == [-1.0, 0.0, 2.0, 3.0]
+    # only the file holding the key was rewritten
+    assert T.history(p1)[-1]["n_removed"] == 1
+
+
+@pytest.mark.parametrize("max_probe_keys", [1, 2, 100_000])
+def test_pruned_merge_key_collect_paths_match_unpruned(spark, tmp_path, max_probe_keys):
+    """Every way the pruned MERGE gets its keys gives the full merge's
+    table: all rows collected (<= max_probe_keys rows), distinct keys after
+    too many rows (2 keys in 3 rows), and the [min, max] interval once the
+    distinct keys exceed max_probe_keys."""
+    base = spark.createDataFrame([(k, "old") for k in range(1, 9)], "k int, v string")
+    p1, p2 = str(tmp_path / "pruned"), str(tmp_path / "plain")
+    for p in (p1, p2):
+        T.create_table(base.repartitionByRange(4, "k"), p, stat_cols=["k"])
+    upd = spark.createDataFrame([(2, "a"), (2, "b"), (7, "c")], "k int, v string")
+    T.merge_upsert_pruned(spark, upd, p1, ["k"], stat_cols=["k"], max_probe_keys=max_probe_keys)
+    T.merge_upsert(spark, upd, p2, ["k"], stat_cols=["k"])
+    assert sorted(T.read(spark, p1).collect()) == sorted(T.read(spark, p2).collect())
+
+
+@pytest.mark.parametrize("ntz", [False, True], ids=["timestamp", "timestamp_ntz"])
+def test_read_between_datetime_bounds_returns_every_row(spark, tmp_path, ntz, driver_tz):
+    """Datetime bounds equal to a file's min/max must keep that file:
+    read(between=/eq=) and pruned_file_count compare in the stats' form.
+    (How Spark itself compares a naive literal with an NTZ column on a
+    non-UTC driver is the filter's business: the pruned read must return
+    what the unpruned filter returns.)"""
+    p = str(tmp_path / "t")
+    _day_files(spark, p, ntz)
+    days = sorted(r.dt for r in T.read(spark, p).collect())
+    d1 = days[1]
+    assert T.pruned_file_count(p, "dt", d1, d1) == (1, 4)
+    assert T.pruned_file_count(p, "dt", days[0], days[2]) == (3, 4)
+    full = T.read(spark, p)
+    for got, want in [
+        (T.read(spark, p, between=("dt", d1, d1)), full.filter(F.col("dt").between(d1, d1))),
+        (T.read(spark, p, between=("dt", days[0], days[2])),
+         full.filter(F.col("dt").between(days[0], days[2]))),
+        (T.read(spark, p, eq=("dt", d1)), full.filter(F.col("dt") == d1)),
+    ]:
+        assert sorted(got.collect()) == sorted(want.collect())
+    if not ntz:
+        assert T.read(spark, p, between=("dt", d1, d1)).count() == 1
+
+
+def test_eq_probe_on_timestamp_bloom_keeps_matching_file(spark, tmp_path, driver_tz):
+    """Bloom bits of a timestamp column hash the footer's aware form; a
+    naive datetime probe must not read as 'definitely absent'."""
+    p = str(tmp_path / "t")
+    df = spark.range(3).selectExpr("timestamp_seconds(id * 3600) AS ts", "id")
+    T.create_table(df, p, bloom_cols=["ts"])
+    ts1 = T.read(spark, p).filter("id = 1").first().ts
+    assert T.read(spark, p, eq=("ts", ts1)).count() == 1
+
+
+# --- log-resolved read schemas --------------------------------------------------
+
+
+def _jobs_started(spark, fn):
+    """Spark jobs started while ``fn`` runs (job-group probe)."""
+    sc = spark.sparkContext
+    group = f"probe-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _merged_read(spark, path):
+    files = T.snapshot_files(path)
+    return spark.read.option("mergeSchema", "true").parquet(
+        *[T._data_path(path, a) for a in files]
+    )
+
+
+def test_read_takes_schema_from_log_without_jobs(spark, tbl):
+    """A table whose live files share one logged schema is read with that
+    schema: no footer-merge job, and the same schema (names, order, types,
+    nullability, nested containsNull) as the merged read — also once the
+    file list comes from a checkpoint. (One file per commit: Spark lists
+    more than spark.sql.sources.parallelPartitionDiscovery.threshold paths
+    with a job of its own.)"""
+    df = spark.range(4, numPartitions=1).selectExpr(
+        "id", "'x' AS s", "array(id) AS arr", "timestamp_seconds(id) AS ts",
+        "to_timestamp_ntz(timestamp_seconds(id)) AS ntz", "cast(id AS decimal(9, 2)) AS d",
+    )
+    T.create_table(df, tbl)
+    for _ in range(T.CHECKPOINT_EVERY):
+        T.append(df, tbl)
+    assert any(f.startswith("_checkpoint-") for f in os.listdir(T._log_dir(tbl)))
+    got, n_jobs = _jobs_started(spark, lambda: T.read(spark, tbl))
+    assert n_jobs == 0
+    assert got.schema == _merged_read(spark, tbl).schema
+    assert got.count() == 4 * (T.CHECKPOINT_EVERY + 1)
+    # the probe does see the footer merge of a two-schema table
+    T.append(df.withColumn("extra", F.lit(1)), tbl)
+    evolved, n_jobs = _jobs_started(spark, lambda: T.read(spark, tbl))
+    assert n_jobs >= 1 and "extra" in evolved.columns
+
+
+def test_read_falls_back_to_footer_merge_without_logged_schema(spark, tbl):
+    """Legacy logs (no schema ids on adds, no schema map in checkpoints)
+    read exactly as before through the mergeSchema path."""
+    df = spark.range(3).selectExpr("id", "'x' AS s")
+    T.create_table(df, tbl)
+    for _ in range(T.CHECKPOINT_EVERY):
+        T.append(df, tbl)
+    d = T._log_dir(tbl)
+    for f in os.listdir(d):
+        full = os.path.join(d, f)
+        if not f.endswith(".json"):
+            continue
+        with open(full) as fh:
+            body = json.load(fh)
+        body.pop("schemas", None)
+        for a in body.get("add", []) + body.get("files", []):
+            a.pop("schema_id", None)
+        with open(full, "w") as fh:
+            json.dump(body, fh)
+    got, n_jobs = _jobs_started(spark, lambda: T.read(spark, tbl))
+    assert n_jobs >= 1
+    assert got.schema == _merged_read(spark, tbl).schema
+    assert got.count() == 3 * (T.CHECKPOINT_EVERY + 1)
+
+
+def test_compact_logs_schema_for_log_resolved_reads(spark, tbl):
+    """compact logs the schema it wrote, so the compacted files (and a
+    rename on top of them) still read with the logged schema."""
+    T.create_table(spark.range(3).selectExpr("id", "'x' AS a"), tbl)
+    T.rename_column(tbl, "a", "b")
+    T.compact(spark, tbl)
+    T.rename_column(tbl, "b", "c")
+    got, n_jobs = _jobs_started(spark, lambda: T.read(spark, tbl))
+    assert n_jobs == 0
+    assert got.columns == ["id", "c"] and got.count() == 3
