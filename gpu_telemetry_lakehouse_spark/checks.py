@@ -10,9 +10,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .session import thread_target
+
 
 class CheckError(AssertionError):
-    pass
+    # the failing (model, column, kind) when raised by run_reference_checks
+    check: tuple[str, str, str] | None = None
 
 
 def expect_not_null(df: DataFrame, col: str, model: str = "") -> None:
@@ -91,6 +94,9 @@ ENGINE_CHECKS = [
     ("silver_gpu_timeseries", "cpu_util_pct", "finite"),
 ]
 
+# every declared check, in the order that decides which failure raises
+CHECKS = REFERENCE_CHECKS + ENGINE_CHECKS
+
 _KIND = {
     "unique": expect_unique,
     "not_null": expect_not_null,
@@ -105,10 +111,16 @@ def run_reference_checks(built: dict[str, DataFrame]) -> None:
     concurrent submission back-fills those tails (Spark's FIFO scheduler
     overlaps jobs whenever slots are free). Deterministic outcome: every
     check still runs, and on failures the FIRST failing check in declaration
-    order raises — exactly the exception the sequential loop raised."""
+    order raises — exactly the exception the sequential loop raised. The
+    raised error's ``check`` names the failing ``(model, column, kind)``.
+
+    Only the checks of models present in ``built`` run, so a caller can
+    check each model as soon as it is built (``flow.full_refresh`` does)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    todo = [c for c in REFERENCE_CHECKS + ENGINE_CHECKS if c[0] in built]
+    todo = [c for c in CHECKS if c[0] in built]
+    if not todo:
+        return
 
     def one(c: tuple) -> CheckError | None:
         model, col, kind = c
@@ -116,10 +128,13 @@ def run_reference_checks(built: dict[str, DataFrame]) -> None:
             _KIND[kind](built[model], col, model)
             return None
         except CheckError as e:
+            e.check = c
             return e
 
+    spark = built[todo[0][0]].sparkSession
     with ThreadPoolExecutor(max_workers=4) as pool:
-        errors = list(pool.map(one, todo))
-    for err in errors:
+        futures = [pool.submit(thread_target(spark, one), c) for c in todo]
+    for f in futures:
+        err = f.result()
         if err is not None:
             raise err

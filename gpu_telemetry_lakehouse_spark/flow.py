@@ -4,20 +4,50 @@ reference: pipelines/flow_full_refresh.py:79-90 — a Prefect flow of
 subprocess hops (ingest, dbt run, dbt test, ML train, ML score). Spark-first:
 one driver, function calls, DataFrames end to end; the only process
 boundaries left are Spark shuffles.
+
+``full_refresh`` runs as a dependency-driven DAG, the way dbt runs
+independent nodes on its ``threads``. The five bronze ingests run
+concurrently (``ingest_all``). Then every node is submitted to a thread pool
+as soon as its deps are done: each table model is built and materialized
+once its deps' read-backs exist (the three silver tables overlap, the gold
+marts overlap), each model's declared checks start as soon as that model is
+materialized, and the scoring fit starts as soon as
+``gold_cluster_util_daily`` exists. Only the scored table's commit waits for
+every check. At lake sizes where each step is a one-task Spark job, this
+fills the cores a serial loop leaves idle; Spark's FIFO scheduler overlaps
+the concurrent jobs. Each node's jobs carry the caller's job group and the
+description ``medallion:<node>``.
+
+Failure semantics. The order of the old serial loop ranks the nodes:
+models in topo order, then the checks in ``REFERENCE_CHECKS +
+ENGINE_CHECKS`` order, then the scoring fit, then the scored commit. After a
+failure, no node ranked after it is submitted; nodes already running
+finish, and nodes ranked before it still run. The call then raises the
+failure ranked first — the exception the serial loop raised; for checks,
+the first failing check in declaration order. No pool thread outlives the
+call. Each table commit stays atomic (tablog), but the refresh as a whole
+never was: a table the serial loop would have committed before the failure
+is committed here too, and a sibling already running may commit even when
+another branch fails.
 """
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
+from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
 from . import models as M
 from . import tablog as T
-from .checks import run_reference_checks
+from .checks import CHECKS, CheckError, run_reference_checks
 from .ingest import ingest_all
 from .ml.anomaly import DEFAULT_FEATURES, score_driver_side
+from .session import thread_target
 
 log = logging.getLogger(__name__)
 
@@ -47,42 +77,114 @@ def _materialize(spark: SparkSession, df: DataFrame, path: str, name: str) -> Da
     return T.read(spark, path)
 
 
+@dataclass
+class _Node:
+    deps: tuple[str, ...]  # node or input names
+    run: Callable[[dict], object]  # called with {dep: value}
+    rank: int  # position in the serial order
+
+
+def _run_dag(spark: SparkSession, inputs: dict, nodes: dict[str, _Node], failure_rank) -> dict:
+    """Run ``nodes`` on a thread pool, each once its node deps are done.
+
+    Deps that are not nodes come from ``inputs``; a missing one fails the
+    node with the KeyError the serial loop raised. A node is only submitted
+    when its deps are done, so no pool thread ever waits on another node:
+    any pool size is deadlock-free. ``max_workers`` is only a cap — the
+    executor starts a thread when no idle one is free, so the threads track
+    the number of nodes ready at once (the DAG's width). ``failure_rank(key,
+    exc)`` places a failure in the serial order; see the module docstring
+    for what happens after one."""
+    done = dict(inputs)
+    pending = dict(nodes)
+    running: dict = {}
+    failure: tuple[int, Exception] | None = None
+
+    def fail(key: str, exc: Exception) -> None:
+        nonlocal failure
+        rank = failure_rank(key, exc)
+        if failure is None or rank < failure[0]:
+            failure = (rank, exc)
+
+    with ThreadPoolExecutor(max_workers=len(nodes)) as pool:
+        while True:
+            for key, node in list(pending.items()):
+                if failure is not None and node.rank > failure[0]:
+                    continue
+                if any(d in nodes and d not in done for d in node.deps):
+                    continue
+                del pending[key]
+                try:
+                    deps = {d: done[d] for d in node.deps}
+                except KeyError as e:
+                    fail(key, e)
+                    continue
+                task = thread_target(spark, node.run, f"medallion:{key}")
+                running[pool.submit(task, deps)] = key
+            if not running:
+                break
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for f in finished:
+                key = running.pop(f)
+                try:
+                    done[key] = f.result()
+                except Exception as e:
+                    fail(key, e)
+    if failure is not None:
+        raise failure[1]
+    return done
+
+
 def full_refresh(spark: SparkSession, source_dir: str, lake_dir: str) -> dict[str, DataFrame]:
     """Run the whole medallion pipeline; returns every built frame.
 
     Persisted tiers mirror the reference's materializations: bronze parquet
     (ingest), silver/gold as versioned tablog tables (our improvement — the
     reference overwrites single files with no history, SURVEY.md §1.4).
+    Runs as a concurrent DAG; see the module docstring.
     """
     bronze = ingest_all(spark, source_dir, lake_dir)
-    # Build and materialize INTERLEAVED in dependency order: build_all wires
-    # every model to its deps' lazy lineages, so materializing afterwards
-    # (the pre-r9 shape) left each GOLD table's write recomputing its silver
-    # deps from the bronze CSVs — a full CSV re-parse per gold mart (r9
-    # profile: gold_job_efficiency materialize 5-8s, gold_user 4-7s at
-    # sf0.1). Replacing each table-model with its tablog read-back BEFORE
-    # dependents build makes every tier consume the WRITTEN tier below —
-    # checkpoint-per-stage, the module-docstring 100 TB contract. Values are
-    # identical: the parquet round-trip is value-preserving and downstream
-    # arithmetic is unchanged.
-    built: dict[str, DataFrame] = dict(bronze)
-    for name in M.topo_order(None):
+    wh = os.path.join(lake_dir, "warehouse")
+    # Each table model is replaced by its tablog read-back BEFORE dependents
+    # build, so every tier consumes the WRITTEN tier below instead of
+    # recomputing its deps from the bronze CSVs (r9 profile: a full CSV
+    # re-parse per gold mart) — checkpoint-per-stage, the module-docstring
+    # 100 TB contract. Values are identical: the parquet round-trip is
+    # value-preserving and downstream arithmetic is unchanged.
+    def build(name: str, deps: dict) -> DataFrame:
         m = M.MODELS[name]
-        df = m.build(**{d: built[d] for d in m.deps})
+        df = m.build(**deps)
         if m.materialized == "table":
-            path = os.path.join(lake_dir, "warehouse", name)
-            df = _materialize(spark, df, path, name)
-        built[name] = df
+            df = _materialize(spark, df, os.path.join(wh, name), name)
+        return df
 
-    run_reference_checks(built)  # dbt test equivalent
+    order = M.topo_order(None)
+    nodes = {n: _Node(M.MODELS[n].deps, functools.partial(build, n), i) for i, n in enumerate(order)}
+    n_models = len(nodes)
+    for model in dict.fromkeys(c[0] for c in CHECKS if c[0] in nodes):
+        first = next(i for i, c in enumerate(CHECKS) if c[0] == model)
+        # dbt test equivalent; called through the module attribute
+        nodes[f"checks:{model}"] = _Node((model,), lambda deps: run_reference_checks(deps), n_models + first)
+    check_keys = tuple(k for k in nodes if k.startswith("checks:"))
+    scored = "gold_cluster_util_daily_scored"
+    nodes["score"] = _Node(
+        ("gold_cluster_util_daily",),
+        lambda deps: score_driver_side(spark, deps["gold_cluster_util_daily"], DEFAULT_FEATURES),
+        n_models + len(CHECKS),
+    )
+    nodes[scored] = _Node(
+        ("score", *check_keys),
+        lambda deps: _materialize(spark, deps["score"], os.path.join(wh, scored), scored),
+        n_models + len(CHECKS) + 1,
+    )
 
-    if "gold_cluster_util_daily" in built:
-        scored = score_driver_side(spark, built["gold_cluster_util_daily"], DEFAULT_FEATURES)
-        name = "gold_cluster_util_daily_scored"
-        path = os.path.join(lake_dir, "warehouse", name)
-        built[name] = _materialize(spark, scored, path, name)
+    def failure_rank(key: str, exc: Exception) -> int:
+        if isinstance(exc, CheckError) and exc.check in CHECKS:
+            return n_models + CHECKS.index(exc.check)
+        return nodes[key].rank
 
-    return built
+    done = _run_dag(spark, bronze, nodes, failure_rank)
+    return {k: done[k] for k in (*bronze, *order, scored)}
 
 
 def incremental_update(

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .schemas import BRONZE_SOURCES
+from .session import thread_target
 
 log = logging.getLogger(__name__)
 
@@ -45,7 +46,9 @@ def ingest_csv(
     df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
     df.write.mode("overwrite").parquet(out_path)
     log.info("Wrote %s rows -> %s", obs.get["rows"], out_path)
-    return spark.read.parquet(out_path)
+    # Read back with the declared schema: footer inference would cost a job
+    # and yields the same schema (the file source makes every field nullable).
+    return spark.read.schema(schema).parquet(out_path)
 
 
 def ingest_csv_quarantine(
@@ -89,12 +92,24 @@ def ingest_csv_quarantine(
 
 
 def ingest_all(spark: SparkSession, source_dir: str, lake_dir: str) -> dict[str, DataFrame]:
-    """All five bronze datasets (skips sources missing on disk)."""
-    out: dict[str, DataFrame] = {}
+    """All five bronze datasets (skips sources missing on disk).
+
+    The hops are independent, so they run concurrently: at lake sizes where
+    each is a one-task job, a serial loop leaves all but one core idle. On
+    failure every hop still finishes, and the first failing dataset in
+    ``BRONZE_SOURCES`` order raises."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    todo = {}
     for name, schema in BRONZE_SOURCES.items():
         src = os.path.join(source_dir, SOURCE_FILES[name])
         if not os.path.exists(src):
             log.warning("source %s missing, skipping %s", src, name)
             continue
-        out[name] = ingest_csv(spark, src, schema, os.path.join(lake_dir, "bronze", name))
-    return out
+        todo[name] = (src, schema, os.path.join(lake_dir, "bronze", name))
+    with ThreadPoolExecutor(max_workers=len(BRONZE_SOURCES)) as pool:
+        futures = {
+            name: pool.submit(thread_target(spark, ingest_csv, f"medallion:{name}"), spark, *args)
+            for name, args in todo.items()
+        }
+    return {name: f.result() for name, f in futures.items()}

@@ -1,10 +1,10 @@
 """Medallion model registry — the dbt ref()-DAG re-expressed as Python.
 
 Each model is a pure function ``inputs -> DataFrame`` with declared deps;
-``build_all`` topologically orders them (reference: dbt_project DAG,
-SURVEY.md §3.2). Materialization follows the reference: bronze = lazy views,
-silver/gold = persisted tables (models/bronze/*.sql ``materialized='view'``,
-silver/gold ``'table'``).
+``topo_order`` orders them (reference: dbt_project DAG, SURVEY.md §3.2) and
+``flow.full_refresh`` runs them as a concurrent DAG. Materialization follows
+the reference: bronze = lazy views, silver/gold = persisted tables
+(models/bronze/*.sql ``materialized='view'``, silver/gold ``'table'``).
 """
 
 from __future__ import annotations
@@ -57,20 +57,6 @@ def topo_order(targets: list[str] | None = None) -> list[str]:
     for t in targets or list(MODELS):
         visit(t)
     return order
-
-
-def build_all(bronze: dict[str, DataFrame], targets: list[str] | None = None) -> dict[str, DataFrame]:
-    """Build models in dependency order from the bronze inputs.
-
-    ``bronze`` supplies the source frames (bronze_* names); derived models
-    receive their deps' DataFrames as keyword args.
-    """
-    built: dict[str, DataFrame] = dict(bronze)
-    for name in topo_order(targets):
-        m = MODELS[name]
-        kwargs = {d: built[d] for d in m.deps}
-        built[name] = m.build(**kwargs)
-    return built
 
 
 # --- bronze views (passthrough; reference: models/bronze/*.sql) --------------

@@ -11,6 +11,7 @@ days in local tz — we standardize on UTC; see SURVEY.md §1.2).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
@@ -137,3 +138,24 @@ def get_spark(app: str = "gpu-telemetry-lakehouse-spark", cpus: int | None = Non
     spark.sparkContext.setLogLevel("WARN")
     return apply_runtime_confs(spark)
 
+
+def thread_target(spark: SparkSession, fn: Callable, description: str | None = None) -> Callable:
+    """``fn`` made ready to run on a pool thread.
+
+    A new thread starts with no Spark local properties, so the jobs it runs
+    would escape the caller's job group (``cancelJobGroup`` could not stop
+    them) and scheduler pool. The wrapper copies the calling thread's
+    properties and tags now, at wrap time, into the thread that runs it —
+    so wrap once per task, on the submitting thread. ``description``, when
+    given, becomes the job description of that task's jobs."""
+    from pyspark import inheritable_thread_target
+
+    def run(*args, **kwargs):
+        if description is not None:
+            spark.sparkContext.setJobDescription(description)
+        return fn(*args, **kwargs)
+
+    inherit = inheritable_thread_target(spark)
+    # outside pinned-thread mode PySpark hands the session back: Python
+    # threads then have no JVM thread of their own to carry properties
+    return run if isinstance(inherit, SparkSession) else inherit(run)

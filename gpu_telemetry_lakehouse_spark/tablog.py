@@ -78,6 +78,7 @@ from pyspark.sql.types import (
     ShortType,
     StringType,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 
@@ -992,11 +993,24 @@ def read(
     df = _apply_renames(df, snapshot_renames(path, version))
     if between is not None:
         col, lo, hi = between
-        df = df.filter(F.col(col).between(lo, hi))
+        df = df.filter(F.col(col).between(_bound(df, col, lo), _bound(df, col, hi)))
     if eq is not None:
         col, val = eq
-        df = df.filter(F.col(col) == F.lit(val))
+        df = df.filter(F.col(col) == _bound(df, col, val))
     return df
+
+
+def _bound(df: DataFrame, col: str, v):
+    """A read bound as a literal comparable with ``col``. A naive datetime
+    against a TimestampNTZ column is wall-clock time in no zone, so it
+    becomes a TIMESTAMP_NTZ literal: ``F.lit`` would make it a TIMESTAMP in
+    the driver's zone, which Spark casts back to NTZ in the session zone —
+    off by the difference, so a non-UTC driver lost the boundary rows."""
+    if isinstance(v, _dt.datetime) and v.tzinfo is None and any(
+        f.name == col and isinstance(f.dataType, TimestampNTZType) for f in df.schema.fields
+    ):
+        return F.lit(v.isoformat(sep=" ")).cast(TimestampNTZType())
+    return F.lit(v)
 
 
 def pruned_file_count(path: str, col: str, lo, hi, version: int | None = None) -> tuple[int, int]:

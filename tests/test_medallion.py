@@ -354,3 +354,142 @@ def test_incremental_batches_alternating_days_match_full_rebuild(spark, tmp_path
             *[T._data_path(path, a) for a in T.snapshot_files(path)]
         )
         assert T.read(spark, path).schema == merged.schema, name
+
+
+def _group_jobs(spark, group: str | None) -> set[int]:
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def _in_job_group(spark, fn):
+    """Run ``fn`` under a fresh caller's job group; return (result, job ids
+    in the group, job ids started outside any group meanwhile)."""
+    sc = spark.sparkContext
+    group = f"caller-{os.urandom(4).hex()}"
+    before = _group_jobs(spark, None)
+    sc.setJobGroup(group, "caller")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, _group_jobs(spark, group), _group_jobs(spark, None) - before
+
+
+def test_refresh_jobs_stay_in_callers_job_group(spark, source_dir, tmp_path):
+    """Every job of a refresh — pool threads' ingests, models, checks and
+    scoring included — lands in the job group the caller set, so
+    cancelJobGroup can stop all of it."""
+    _, grouped, escaped = _in_job_group(
+        spark, lambda: full_refresh(spark, source_dir, str(tmp_path / "lake"))
+    )
+    assert grouped and not escaped
+
+
+def test_ingest_csv_one_job_declared_schema(spark, source_dir, tmp_path):
+    """One CSV -> parquet hop is one Spark job: the read-back takes the
+    declared schema instead of inferring it from the footers, and equals
+    the inferred schema."""
+    from gpu_telemetry_lakehouse_spark.ingest import SOURCE_FILES, ingest_csv
+    from gpu_telemetry_lakehouse_spark.schemas import BRONZE_SOURCES
+
+    for name, schema in BRONZE_SOURCES.items():
+        out = str(tmp_path / name)
+        src = os.path.join(source_dir, SOURCE_FILES[name])
+        df, jobs, _ = _in_job_group(spark, lambda: ingest_csv(spark, src, schema, out))
+        assert len(jobs) == 1, name
+        assert df.schema == spark.read.parquet(out).schema, name
+
+
+def test_dag_failure_stops_later_ranks_only(spark):
+    """After a failure no node ranked after it is submitted, nodes already
+    running finish, and nodes ranked before it still run: the rank-1 node,
+    whose dep finishes only after the rank-2 node failed, runs and fails,
+    and its error is the one raised."""
+    import threading
+    import time
+
+    from gpu_telemetry_lakehouse_spark.flow import _Node, _run_dag
+
+    b_failed = threading.Event()
+    ran = []
+
+    def root(deps):
+        assert b_failed.wait(30)
+        time.sleep(0.5)  # the runner records b's failure meanwhile
+        ran.append("root")
+
+    def failing(name):
+        def run(deps):
+            ran.append(name)
+            if name == "b":
+                b_failed.set()
+            raise ValueError(name)
+
+        return run
+
+    def in_flight(deps):
+        time.sleep(1)
+        ran.append("in_flight")
+
+    nodes = {
+        "root": _Node((), root, 0),
+        "a": _Node(("root",), failing("a"), 1),
+        "b": _Node((), failing("b"), 2),
+        "in_flight": _Node((), in_flight, 3),
+        "c": _Node(("root",), lambda deps: ran.append("c"), 4),
+    }
+    with pytest.raises(ValueError, match="^a$"):
+        _run_dag(spark, {}, nodes, lambda key, exc: nodes[key].rank)
+    assert sorted(ran) == ["a", "b", "in_flight", "root"]
+
+
+def test_refresh_raises_first_declared_check_and_skips_scored_commit(spark, tmp_path):
+    """A duplicate job_name fails silver_jobs.job_id unique, the first
+    declared check; a NULL machine also fails a later-declared check of
+    another model, which runs concurrently. The refresh raises the unique
+    check's error, as the serial loop did, and the scored table is never
+    committed."""
+    from gpu_telemetry_lakehouse_spark.checks import CheckError
+
+    (tmp_path / "src").mkdir()
+    src = write_sources(tmp_path / "src")
+    jobs = pd.read_csv(os.path.join(src, "pai_job_table.csv"))
+    jobs.loc[1, "job_name"] = jobs.loc[0, "job_name"]
+    jobs.to_csv(os.path.join(src, "pai_job_table.csv"), index=False)
+    metrics = pd.DataFrame(_machine_metric_rows(3))
+    metrics["machine"] = metrics["machine"].astype(object)
+    metrics.loc[5, "machine"] = None
+    metrics.to_csv(os.path.join(src, "pai_machine_metric.csv"), index=False)
+
+    lake = str(tmp_path / "lake")
+    with pytest.raises(CheckError, match=r"^silver_jobs\.job_id: duplicate keys present$"):
+        full_refresh(spark, src, lake)
+    scored = os.path.join(lake, "warehouse", "gold_cluster_util_daily_scored")
+    assert not os.path.exists(os.path.join(scored, "_txn_log"))
+
+
+def test_refresh_missing_source_raises_keyerror_and_leaves_no_thread(spark, tmp_path):
+    """Without pai_machine_metric.csv the silver_gpu_timeseries node has no
+    input: the refresh raises the serial loop's KeyError, within a time
+    limit, and no pool thread outlives the call."""
+    import threading
+
+    (tmp_path / "src").mkdir()
+    src = write_sources(tmp_path / "src")
+    os.remove(os.path.join(src, "pai_machine_metric.csv"))
+    before = set(threading.enumerate())
+    outcome = []
+
+    def call():
+        try:
+            full_refresh(spark, src, str(tmp_path / "lake"))
+        except Exception as e:
+            outcome.append(e)
+
+    t = threading.Thread(target=call)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive()
+    assert len(outcome) == 1 and isinstance(outcome[0], KeyError)
+    assert outcome[0].args == ("bronze_machine_metrics",)
+    assert set(threading.enumerate()) <= before

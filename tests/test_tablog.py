@@ -2033,26 +2033,25 @@ def test_pruned_merge_key_collect_paths_match_unpruned(spark, tmp_path, max_prob
 @pytest.mark.parametrize("ntz", [False, True], ids=["timestamp", "timestamp_ntz"])
 def test_read_between_datetime_bounds_returns_every_row(spark, tmp_path, ntz, driver_tz):
     """Datetime bounds equal to a file's min/max must keep that file:
-    read(between=/eq=) and pruned_file_count compare in the stats' form.
-    (How Spark itself compares a naive literal with an NTZ column on a
-    non-UTC driver is the filter's business: the pruned read must return
-    what the unpruned filter returns.)"""
+    read(between=/eq=) and pruned_file_count compare in the stats' form,
+    and the re-applied filter keeps the rows whose collected value lies in
+    the bounds — for an NTZ column on a non-UTC driver too, where the
+    bound is wall-clock time in no zone."""
     p = str(tmp_path / "t")
     _day_files(spark, p, ntz)
-    days = sorted(r.dt for r in T.read(spark, p).collect())
+    full = T.read(spark, p).collect()
+    days = sorted(r.dt for r in full)
     d1 = days[1]
     assert T.pruned_file_count(p, "dt", d1, d1) == (1, 4)
     assert T.pruned_file_count(p, "dt", days[0], days[2]) == (3, 4)
-    full = T.read(spark, p)
-    for got, want in [
-        (T.read(spark, p, between=("dt", d1, d1)), full.filter(F.col("dt").between(d1, d1))),
-        (T.read(spark, p, between=("dt", days[0], days[2])),
-         full.filter(F.col("dt").between(days[0], days[2]))),
-        (T.read(spark, p, eq=("dt", d1)), full.filter(F.col("dt") == d1)),
+    for got, lo, hi in [
+        (T.read(spark, p, between=("dt", d1, d1)), d1, d1),
+        (T.read(spark, p, between=("dt", days[0], days[2])), days[0], days[2]),
+        (T.read(spark, p, eq=("dt", d1)), d1, d1),
     ]:
-        assert sorted(got.collect()) == sorted(want.collect())
-    if not ntz:
-        assert T.read(spark, p, between=("dt", d1, d1)).count() == 1
+        assert sorted(got.collect()) == sorted(r for r in full if lo <= r.dt <= hi)
+    assert T.read(spark, p, between=("dt", d1, d1)).count() == 1
+    assert T.read(spark, p, eq=("dt", d1)).count() == 1
 
 
 def test_eq_probe_on_timestamp_bloom_keeps_matching_file(spark, tmp_path, driver_tz):
