@@ -196,16 +196,28 @@ def incremental_update(
 
     Scale contract per tier:
     - **silver** (the big table) is APPEND-ONLY: the new rows land as one
-      tablog append commit — no rewrite of history, ever.
+      tablog append commit — no rewrite of history, ever. The set of days
+      the batch touches is observed on that append's own write job (an
+      ``Observation`` carrying ``collect_set`` of the day), so the late
+      input is read once.
     - the recompute reads back only the touched days: tablog's footer-stats
       ``between`` probe skips every silver file whose ts range misses them,
       so the scan is O(new days), not O(history).
     - **gold** (one row per day) gets exactly the affected day-rows
       recomputed and MERGEd atomically on ``dt`` — identical values to a
       from-scratch rebuild because daily aggregation is partitioned by day:
-      a day's row depends only on that day's samples.
+      a day's row depends only on that day's samples. The recompute is the
+      model's unsorted rows (``models.gold_cluster_util_daily_rows``): a
+      MERGE keeps no row order, so the full build's global sort would only
+      add a range-sampling job and an exchange.
     - the scored table is re-derived from the full gold (IsolationForest
       trains on all days by design — bounded: one row per day).
+
+    One late batch runs 7 Spark jobs: the silver append write, 3 for the
+    MERGE source (persisted) and its key collect, the MERGE write, the gold
+    collect of the scoring and the one-file scored write. A batch with no
+    non-NULL timestamp commits an empty silver append and returns ``{}``
+    without touching gold or the scored table.
 
     Equality with ``full_refresh`` over the union of inputs is pinned in
     tests/test_medallion.py::test_incremental_update_matches_full_rebuild.
@@ -213,10 +225,8 @@ def incremental_update(
     silver_path = os.path.join(lake_dir, "warehouse", "silver_gpu_timeseries")
     gold_path = os.path.join(lake_dir, "warehouse", "gold_cluster_util_daily")
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
-
-    silver_new = M.MODELS["silver_gpu_timeseries"].build(new_machine_metrics)
-    T.append(silver_new, silver_path, stat_cols=STAT_COLS["silver_gpu_timeseries"])
 
     # Touched days as EPOCH SECONDS, truncated JVM-side where the session tz
     # is pinned UTC. (Collecting TimestampType yields naive datetimes in the
@@ -224,9 +234,14 @@ def incremental_update(
     # shift the window on any non-UTC driver and silently drop edge-of-day
     # samples from the recompute.) Driver-sized: one long per distinct day.
     day_s = F.unix_timestamp(F.date_trunc("day", F.timestamp_seconds("ts")))
-    days_epoch = sorted(
-        r.d for r in silver_new.select(day_s.alias("d")).distinct().collect()
+    touched = Observation()
+    silver_new = M.MODELS["silver_gpu_timeseries"].build(new_machine_metrics)
+    T.append(
+        silver_new.observe(touched, F.collect_set(day_s).alias("days")),
+        silver_path,
+        stat_cols=STAT_COLS["silver_gpu_timeseries"],
     )
+    days_epoch = sorted(touched.get["days"])
     if not days_epoch:
         return {}
     lo_s, hi_s = days_epoch[0], days_epoch[-1] + 86400
@@ -237,10 +252,8 @@ def incremental_update(
     sl = T.read(spark, silver_path, between=("ts", lo_s, hi_s)).filter(
         day_s.isin(days_epoch)
     )
-    gold_rows = (
-        M.MODELS["gold_cluster_util_daily"]
-        .build(sl)
-        .filter(F.unix_timestamp("dt").isin(days_epoch))
+    gold_rows = M.gold_cluster_util_daily_rows(sl).filter(
+        F.unix_timestamp("dt").isin(days_epoch)
     )
     # stat-pruned MERGE: only gold files whose dt range can contain the
     # touched days are rewritten — O(affected days), not O(history)

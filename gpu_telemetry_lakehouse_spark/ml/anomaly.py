@@ -10,6 +10,7 @@ Two execution paths with identical results:
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,18 +23,21 @@ DEFAULT_FEATURES = ["avg_gpu_util", "p95_gpu_util", "avg_cpu_util"]
 N_ESTIMATORS, CONTAMINATION, SEED = 100, 0.05, 42
 
 
+def _forest() -> IsolationForest:
+    return IsolationForest(n_estimators=N_ESTIMATORS, contamination=CONTAMINATION, seed=SEED)
+
+
 def train_on_matrix(X) -> tuple[StandardScaler, IsolationForest]:
     """Fit scaler + forest on an already-collected feature matrix."""
     scaler = StandardScaler().fit(X)
-    forest = IsolationForest(
-        n_estimators=N_ESTIMATORS, contamination=CONTAMINATION, seed=SEED
-    ).fit(scaler.transform(X))
-    return scaler, forest
+    return scaler, _forest().fit(scaler.transform(X))
 
 
 def train(gold: DataFrame, features: list[str]) -> tuple[StandardScaler, IsolationForest]:
-    """Fit scaler + forest on the (small) gold table, deterministic order
-    (reference orders by dt before scoring; we sort by all feature cols)."""
+    """Fit scaler + forest on the (small) gold table. Deterministic in any
+    row order: the scaler's moments are order-free and the forest fits on
+    the sorted feature rows (``IsolationForest.fit_score``), so a gold
+    table whose files a MERGE has reshuffled trains the same model."""
     pdf = gold.select(features).toPandas()
     return train_on_matrix(pdf[features].to_numpy(dtype=float))
 
@@ -45,7 +49,11 @@ def score_driver_side(
 
     Gold is collected ONCE and both train and score run from that frame —
     the reference executes its gold query twice (train + score scripts each
-    re-query DuckDB); one collect halves the aggregation work."""
+    re-query DuckDB); one collect halves the aggregation work. The forest
+    scores the rows once, inside its fit (the threshold needs them): the
+    flags compare those unrounded scores with the threshold, exactly as
+    ``predict_flags`` would. The scored frame is one partition, so a
+    commit of it writes one file."""
     pdf = gold.toPandas()
     schema = T.StructType(
         gold.schema.fields
@@ -58,11 +66,13 @@ def score_driver_side(
         # no gold rows => nothing to fit; a typed empty frame keeps the
         # scored-table contract instead of an IndexError inside the fit
         return spark.createDataFrame([], schema=schema)
-    scaler, forest = train_on_matrix(pdf[features].to_numpy(dtype=float))
-    X = scaler.transform(pdf[features].to_numpy(dtype=float))
-    pdf["anomaly_score"] = forest.score_samples(X).round(6)
-    pdf["anomaly_flag"] = forest.predict_flags(X)
-    return spark.createDataFrame(pdf, schema=schema)
+    X = pdf[features].to_numpy(dtype=float)
+    scaler = StandardScaler().fit(X)
+    forest = _forest()
+    scores = forest.fit_score(scaler.transform(X))
+    pdf["anomaly_score"] = scores.round(6)
+    pdf["anomaly_flag"] = (scores >= forest.threshold_).astype(np.int32)
+    return spark.createDataFrame(pdf, schema=schema).coalesce(1)
 
 
 def score_distributed(
@@ -121,8 +131,6 @@ def fit_distributed(
     for c in features:
         aggs += [F.avg(c).alias(f"m_{c}"), F.var_pop(c).alias(f"v_{c}")]
     row = df.agg(*aggs).first()
-    import numpy as np
-
     scaler = StandardScaler()
     scaler.mean_ = np.array([row[f"m_{c}"] for c in features], dtype=float)
     std = np.sqrt(np.array([row[f"v_{c}"] or 0.0 for c in features], dtype=float))

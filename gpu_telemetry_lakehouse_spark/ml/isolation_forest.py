@@ -61,18 +61,30 @@ class IsolationForest:
         )
 
     def fit(self, X: np.ndarray) -> "IsolationForest":
+        self.fit_score(X)
+        return self
+
+    def fit_score(self, X: np.ndarray) -> np.ndarray:
+        """Fit, and return the scores of X's rows — the fit computes them
+        anyway for the contamination threshold.
+
+        The fit depends on the SET of rows, not their order: trees subsample
+        row indices of the lexicographically sorted matrix. (With more than
+        ``max_samples`` rows the subsample would otherwise follow the input
+        order — for a table, the order its files happen to be read in.)"""
         X = np.asarray(X, dtype=np.float64)
+        rows = X[np.lexsort(X.T[::-1])]
         rng = np.random.default_rng(self.seed)
         self.sample_size = min(self.max_samples, len(X))
         limit = int(np.ceil(np.log2(max(self.sample_size, 2))))
         self.trees = []
         for _ in range(self.n_estimators):
-            idx = rng.choice(len(X), size=self.sample_size, replace=False)
-            self.trees.append(self._grow(X[idx], rng, 0, limit))
+            idx = rng.choice(len(rows), size=self.sample_size, replace=False)
+            self.trees.append(self._grow(rows[idx], rng, 0, limit))
         scores = self.score_samples(X)
         # flag the top `contamination` fraction (reference: contamination=0.05)
         self.threshold_ = float(np.quantile(scores, 1.0 - self.contamination))
-        return self
+        return scores
 
     def _path_length(self, x: np.ndarray, node: _Node, depth: int) -> float:
         while node.feature >= 0:
@@ -104,7 +116,9 @@ class StandardScaler:
     std_: np.ndarray | None = None
 
     def fit(self, X: np.ndarray) -> "StandardScaler":
-        X = np.asarray(X, dtype=np.float64)
+        # moments of each column SORTED: float sums depend on the order of
+        # their terms, so this keeps the scaler bit-identical in any row order
+        X = np.sort(np.asarray(X, dtype=np.float64), axis=0)
         self.mean_ = X.mean(axis=0)
         self.std_ = X.std(axis=0)
         self.std_[self.std_ == 0] = 1.0

@@ -106,8 +106,8 @@ def silver_gpu_timeseries(bronze_machine_metrics: DataFrame) -> DataFrame:
 # --- gold_cluster_util_daily -------------------------------------------------
 # reference: models/gold/gold_cluster_util_daily.sql:5-31 — epoch seconds ->
 # timestamp (UTC pinned), day truncation, avg + exact p95, ordered by day.
-@model("gold_cluster_util_daily", deps=("silver_gpu_timeseries",), materialized="table")
-def gold_cluster_util_daily(silver_gpu_timeseries: DataFrame) -> DataFrame:
+def gold_cluster_util_daily_rows(silver_gpu_timeseries: DataFrame) -> DataFrame:
+    """The model's rows, unsorted: one per day of ``silver_gpu_timeseries``."""
     return (
         silver_gpu_timeseries.filter(F.col("gpu_util_pct").isNotNull())
         .withColumn("dt", F.date_trunc("day", F.timestamp_seconds(F.col("ts"))))
@@ -122,8 +122,17 @@ def gold_cluster_util_daily(silver_gpu_timeseries: DataFrame) -> DataFrame:
             F.percentile("gpu_util_pct", F.lit(0.95)).alias("p95_gpu_util"),
             exact_avg("cpu_util_pct").alias("avg_cpu_util"),
         )
-        .orderBy("dt")
     )
+
+
+# Only the full build is sorted: its files come out dt-clustered, so each
+# file's footer [min, max] on dt is a narrow range that the late-batch MERGE
+# (flow.incremental_update) prunes on. That MERGE takes the unsorted rows —
+# a sort there would cost a range-sampling job and an exchange for row
+# order that a MERGE never keeps.
+@model("gold_cluster_util_daily", deps=("silver_gpu_timeseries",), materialized="table")
+def gold_cluster_util_daily(silver_gpu_timeseries: DataFrame) -> DataFrame:
+    return gold_cluster_util_daily_rows(silver_gpu_timeseries).orderBy("dt")
 
 
 # --- silver_gpu_specs: compound-string parsing (reference future work) -------

@@ -177,12 +177,9 @@ def _overlaps(stat: list, lo, hi) -> bool:
         return True
 
 
-def _file_stats(full_path: str, stat_cols: list[str]) -> dict[str, list]:
-    """Per-file [min, max] from the parquet footer (no data read)."""
-    import pyarrow.parquet as pq
-
+def _file_stats(md, stat_cols: list[str]) -> dict[str, list]:
+    """Per-file [min, max] from a parquet footer's metadata (no data read)."""
     stats: dict[str, list] = {}
-    md = pq.ParquetFile(full_path).metadata
     for rg in range(md.num_row_groups):
         g = md.row_group(rg)
         for ci in range(g.num_columns):
@@ -296,8 +293,14 @@ def _stage_files(
     bloom_cols: list[str] | None = None,
 ) -> list[dict]:
     """Write df's partitions as uniquely-named parquet files in the table dir
-    (invisible until a log entry lists them); return add-actions with stats,
-    each tagged with the id of the schema it was written with."""
+    (invisible until a log entry lists them); return add-actions with row
+    count and stats, each tagged with the id of the schema it was written
+    with. Files without rows (Spark writes one for an empty result, to
+    carry the schema) are dropped: the commit logs the schema itself, so an
+    empty write adds nothing and ``read`` of an empty snapshot still has
+    the logged schema."""
+    import pyarrow.parquet as pq
+
     schema_id = _schema_id(df.schema.json())
     staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
     # INT96 (Spark's legacy default) carries no footer stats — force the
@@ -312,13 +315,17 @@ def _stage_files(
     for f in sorted(os.listdir(staging)):
         if not f.endswith(".parquet"):
             continue
+        md = pq.ParquetFile(os.path.join(staging, f)).metadata
+        if md.num_rows == 0:
+            continue  # removed with the staging dir
         name = f"part-{uuid.uuid4().hex}.parquet"
         os.rename(os.path.join(staging, f), os.path.join(path, name))
         full = os.path.join(path, name)
         add = {
             "file": name,
             "bytes": os.path.getsize(full),
-            "stats": _file_stats(full, stat_cols),
+            "rows": md.num_rows,
+            "stats": _file_stats(md, stat_cols),
             "schema_id": schema_id,
         }
         if bloom_cols:
@@ -630,7 +637,7 @@ def rename_column(path: str, old: str, new: str) -> int:
     )
 
 
-def delete_where_dv(spark: SparkSession, path: str, predicate) -> int:
+def delete_where_dv(spark: SparkSession, path: str, predicate) -> int | None:
     """DELETE by DELETION VECTOR: mark matching rows deleted WITHOUT
     rewriting any data file (the Iceberg v2 position-delete / Delta DV
     semantic). Matching (file, row_index) positions — via the parquet
@@ -639,11 +646,14 @@ def delete_where_dv(spark: SparkSession, path: str, predicate) -> int:
     GDPR delete on a 100 TB table costs seconds, not a table rewrite.
     Any rewriting operation (compact / optimize / merge / overwrite)
     materializes pending deletes and clears the DV. The read-side anti-join
-    prices each scan by |DV| — run compact when the DV grows large."""
+    prices each scan by |DV| — run compact when the DV grows large.
+    A snapshot without data files has no row to mark: nothing is
+    committed and the call returns None."""
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     rv = current_version(path)
     files = snapshot_files(path, rv)
-    assert files, "delete_where_dv on an empty table"
+    if not files:
+        return None
     base = spark.read.option("mergeSchema", "true").parquet(
         *[_data_path(path, a) for a in files]
     )
@@ -2016,7 +2026,16 @@ def read_branch(spark: SparkSession, path: str, name: str) -> DataFrame:
     """The branch's current snapshot: base version data (with the base
     deletion vector still honored) plus branch writes."""
     files, base = _branch_snapshot(path, name)
-    assert files, f"empty branch snapshot: {name} at {path}"
+    if not files:
+        # only empty writes (they log no files): the newest logged schema
+        schema = next(
+            (e["schema"] for e in reversed(_branch_entries(path, name)) if e.get("schema")),
+            None,
+        )
+        if schema is None:
+            return read(spark, path, version=base)
+        empty = spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
+        return _apply_renames(empty, snapshot_renames(path, base))
     df = spark.read.option("mergeSchema", "true").parquet(
         *[_data_path(path, a) for a in files]
     )

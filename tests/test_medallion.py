@@ -493,3 +493,59 @@ def test_refresh_missing_source_raises_keyerror_and_leaves_no_thread(spark, tmp_
     assert len(outcome) == 1 and isinstance(outcome[0], KeyError)
     assert outcome[0].args == ("bronze_machine_metrics",)
     assert set(threading.enumerate()) <= before
+
+
+@pytest.fixture(scope="module")
+def refreshed_lake(spark, tmp_path_factory):
+    lake = str(tmp_path_factory.mktemp("late_lake"))
+    full_refresh(
+        spark,
+        write_sources(tmp_path_factory.mktemp("late_src"), metric_rows=_machine_metric_rows(3)),
+        lake,
+    )
+    return lake
+
+
+def _late_csv(spark, tmp_path, rows: list[dict]):
+    """A late batch as the benchmark feeds one: a CSV read with the
+    declared schema, so every re-evaluation re-parses the file."""
+    from gpu_telemetry_lakehouse_spark.schemas import MACHINE_METRICS
+
+    path = str(tmp_path / "late.csv")
+    pd.DataFrame(rows).to_csv(path, index=False)
+    return spark.read.schema(MACHINE_METRICS).option("header", True).csv(path)
+
+
+def test_incremental_update_job_budget(spark, refreshed_lake, tmp_path):
+    """One late batch — an old day and a new one — runs at most 7 Spark
+    jobs, all in the caller's job group: the touched days ride the silver
+    append's write (no distinct collect), the gold recompute has no sort,
+    and the scored table is one partition."""
+    from gpu_telemetry_lakehouse_spark.flow import incremental_update
+
+    late = _late_csv(
+        spark,
+        tmp_path,
+        _machine_metric_rows(2, start_day=1, ks=range(4, 6)) + _machine_metric_rows(4, start_day=3),
+    )
+    out, grouped, escaped = _in_job_group(spark, lambda: incremental_update(spark, refreshed_lake, late))
+    assert out["gold_cluster_util_daily"].count() == 4
+    assert 0 < len(grouped) <= 7 and not escaped, sorted(grouped)
+
+
+def test_incremental_update_null_timestamps_touch_no_gold(spark, refreshed_lake, tmp_path):
+    """A late batch whose rows all lack ``end_time`` has no day to
+    recompute: the call returns ``{}`` and commits no gold or scored
+    version (the silver append it makes adds no data file)."""
+    from gpu_telemetry_lakehouse_spark import tablog as T
+    from gpu_telemetry_lakehouse_spark.flow import incremental_update
+
+    wh = os.path.join(refreshed_lake, "warehouse")
+    tables = ("gold_cluster_util_daily", "gold_cluster_util_daily_scored")
+    before = {t: T.current_version(os.path.join(wh, t)) for t in tables}
+    silver = os.path.join(wh, "silver_gpu_timeseries")
+    silver_files = T.snapshot_files(silver)
+    rows = [dict(r, end_time=None) for r in _machine_metric_rows(2, start_day=1)]
+    assert incremental_update(spark, refreshed_lake, _late_csv(spark, tmp_path, rows)) == {}
+    assert {t: T.current_version(os.path.join(wh, t)) for t in tables} == before
+    assert T.snapshot_files(silver) == silver_files

@@ -234,3 +234,26 @@ def test_als_recommender_invariants(spark, sf_dir):
     )
     assert recs.exceptAll(r2).count() == 0
     recs.unpersist()
+
+
+def test_driver_scoring_independent_of_row_order(spark):
+    """More rows than the forest's 256-row subsample: the scores and flags
+    of every key must not depend on the order gold's rows arrive in (after
+    a MERGE, the order its files are read in)."""
+    import pandas as pd
+
+    from gpu_telemetry_lakehouse_spark.ml.anomaly import score_driver_side
+
+    X = _toy_data(n=300, seed=11)
+    pdf = pd.DataFrame(X, columns=["a", "b", "c"])
+    pdf.insert(0, "k", range(len(pdf)))
+    shuffled = pdf.sample(frac=1.0, random_state=3)
+
+    def scored(frame):
+        df = spark.createDataFrame(frame)
+        out = score_driver_side(spark, df, ["a", "b", "c"]).collect()
+        return {r.k: (r.anomaly_score, r.anomaly_flag) for r in out}
+
+    by_key = scored(pdf)
+    assert len(by_key) == 300
+    assert scored(shuffled) == by_key

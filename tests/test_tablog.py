@@ -1354,11 +1354,12 @@ def test_compact_small_rewrites_only_slivers(spark, sf_dir, tbl):
     o = _orders(spark, sf_dir).select("o_orderkey", "o_totalprice")
     T.create_table(o.limit(5000), tbl)  # the settled bulk
     big = {a["file"] for a in T.snapshot_files(tbl)}
-    for k in range(4):  # four streamed slivers
+    for k in range(4):  # four streamed 10-row slivers (re-sent rows)
         T.append(
-            o.limit(5010 + 10 * k).exceptAll(o.limit(5000 + 10 * k)).coalesce(1),
+            o.filter(F.col("o_orderkey").between(10 * k, 10 * k + 9)).coalesce(1),
             tbl,
         )
+    assert len(T.snapshot_files(tbl)) == len(big) + 4
     n_before = T.read(spark, tbl).count()
     v = T.compact_small(spark, tbl, small_bytes=16 * 1024, min_small=2)
     assert v is not None
@@ -2147,3 +2148,33 @@ def test_compact_logs_schema_for_log_resolved_reads(spark, tbl):
     got, n_jobs = _jobs_started(spark, lambda: T.read(spark, tbl))
     assert n_jobs == 0
     assert got.columns == ["id", "c"] and got.count() == 3
+
+
+def test_empty_append_batch_logs_no_file(spark, tbl):
+    """An epoch without rows commits only its batch id: no add (Spark's
+    schema-only file for an empty result is not logged), the id still
+    guards a replay, and the table reads with the logged schema. Every
+    logged add carries its footer row count."""
+    df = spark.range(3, numPartitions=2).selectExpr("id", "'x' AS s")
+    T.create_table(df, tbl)
+    files_before = T.snapshot_files(tbl)
+    assert all(a["rows"] > 0 for a in files_before)
+    assert sum(a["rows"] for a in files_before) == 3
+    v = T.append_batch(df.filter("id < 0"), tbl, batch_id=7)
+    entry = T._read_entry(tbl, v)
+    assert entry["add"] == [] and entry["batch_id"] == 7
+    assert 7 in T.committed_batch_ids(tbl)
+    assert T.append_batch(df.filter("id < 0"), tbl, batch_id=7) is None
+    assert T.current_version(tbl) == v
+    assert T.snapshot_files(tbl) == files_before
+    assert T.read(spark, tbl).count() == 3
+
+    empty = str(tbl) + "_empty"
+    T.create_table(df.filter("id < 0"), empty)
+    assert T.snapshot_files(empty) == []
+    got = T.read(spark, empty)
+    assert got.count() == 0 and got.schema == df.schema
+    T.branch_create(empty, "etl")
+    T.branch_append(df.filter("id < 0"), empty, "etl")
+    branch = T.read_branch(spark, empty, "etl")
+    assert branch.count() == 0 and branch.columns == df.columns
