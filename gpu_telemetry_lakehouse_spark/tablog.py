@@ -65,6 +65,7 @@ import os
 import re
 import shutil
 import uuid
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -96,16 +97,18 @@ class ConcurrentModificationError(RuntimeError):
     and retry transparently."""
 
 
-def _log_dir(path: str) -> str:
-    return os.path.join(path, LOG_DIR)
+def _log_dir(path: str, branch: str | None = None) -> str:
+    """The main log's directory, or a WAP branch's log inside it."""
+    d = os.path.join(path, LOG_DIR)
+    return d if branch is None else os.path.join(d, f"_branch-{branch}")
 
 
-def _entry_path(path: str, version: int) -> str:
-    return os.path.join(_log_dir(path), f"{version:020d}.json")
+def _entry_path(path: str, version: int, branch: str | None = None) -> str:
+    return os.path.join(_log_dir(path, branch), f"{version:020d}.json")
 
 
-def _list_versions(path: str) -> list[int]:
-    d = _log_dir(path)
+def _list_versions(path: str, branch: str | None = None) -> list[int]:
+    d = _log_dir(path, branch)
     if not os.path.isdir(d):
         return []
     return sorted(
@@ -261,6 +264,17 @@ def _bloom_might_contain(bloom: dict, value) -> bool:
     return True
 
 
+def _may_match(a: dict, col: str, lo, hi, eq: bool = False) -> bool:
+    """Whether add-entry ``a`` can hold a ``col`` value in [lo, hi] by its
+    logged footer stats; an ``eq`` probe (lo == hi) also asks its Bloom
+    filter. A file without stats or a filter is kept."""
+    stat = a.get("stats", {}).get(col)
+    if stat is not None and not _overlaps(stat, lo, hi):
+        return False
+    bloom = a.get("bloom", {}).get(col) if eq else None
+    return bloom is None or _bloom_might_contain(bloom, lo)
+
+
 def _data_path(path: str, a: dict) -> str:
     """Absolute path of an add-entry's data file. Entries normally live in
     the table directory; SHALLOW-CLONE entries carry an explicit ``dir``
@@ -335,8 +349,8 @@ def _stage_files(
     return adds
 
 
-def _read_entry(path: str, version: int) -> dict:
-    with open(_entry_path(path, version)) as f:
+def _read_entry(path: str, version: int, branch: str | None = None) -> dict:
+    with open(_entry_path(path, version, branch)) as f:
         return json.load(f)
 
 
@@ -346,6 +360,7 @@ def _commit(
     max_retries: int = 20,
     read_version: int | None = None,
     conflict_on: tuple = (),
+    branch: str | None = None,
 ) -> int:
     """Optimistic-concurrency commit: EXCL-create the next version slot;
     on collision re-read the log and retry. Returns the committed version.
@@ -362,10 +377,15 @@ def _commit(
     validated against the schema at read time): when the tip has moved past
     ``read_version``, only interleaved entries carrying one of these action
     keys conflict (raise) — unrelated commits (appends) are not conflicts
-    and the commit proceeds at the new slot."""
+    and the commit proceeds at the new slot.
+
+    ``branch`` commits to that WAP branch's log by the same rules, with
+    versions of its own. Branch logs are never checkpointed: they end at
+    publish or drop."""
+    where = path if branch is None else f"{path} (branch {branch})"
     os.makedirs(_log_dir(path), exist_ok=True)
     for _ in range(max_retries):
-        versions = _list_versions(path)
+        versions = _list_versions(path, branch)
         # A commit depends on its read snapshot when it removes files OR
         # carries a deletion vector: a DV built against v5 names v5's files
         # and unions v5's prior DV — publishing it over a moved tip silently
@@ -374,7 +394,7 @@ def _commit(
             tip = versions[-1] if versions else None
             if tip != read_version:
                 raise ConcurrentModificationError(
-                    f"{actions.get('operation')} at {path}: snapshot read at "
+                    f"{actions.get('operation')} at {where}: snapshot read at "
                     f"version {read_version} but tip is now {tip}; re-read "
                     "the table and retry the operation"
                 )
@@ -384,11 +404,11 @@ def _commit(
                 for v in versions:
                     if read_version is not None and v <= read_version:
                         continue
-                    e = _read_entry(path, v)
+                    e = _read_entry(path, v, branch)
                     hit = [k for k in conflict_on if k in e]
                     if hit:
                         raise ConcurrentModificationError(
-                            f"{actions.get('operation')} at {path}: validated "
+                            f"{actions.get('operation')} at {where}: validated "
                             f"at version {read_version} but version {v} "
                             f"carries conflicting action(s) {hit}; re-read "
                             "and retry the operation"
@@ -400,30 +420,30 @@ def _commit(
             ts=_dt.datetime.now(_dt.timezone.utc).isoformat(),
         )
         try:
-            fd = os.open(_entry_path(path, version), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            fd = os.open(
+                _entry_path(path, version, branch), os.O_CREAT | os.O_EXCL | os.O_WRONLY
+            )
         except FileExistsError:
             continue  # another writer won this version — retry against new tip
         with os.fdopen(fd, "w") as f:
             json.dump(entry, f, default=str)  # datetime/decimal stats -> ISO strings
-        if version and version % CHECKPOINT_EVERY == 0:
-            files, schemas = _snapshot(path, version)
+        if branch is None and version and version % CHECKPOINT_EVERY == 0:
+            snap = _snapshot(path, version)
             cp = os.path.join(_log_dir(path), f"_checkpoint-{version:020d}.json")
             cp_body = {
                 "version": version,
-                "files": files,
+                "files": snap.files,
                 # the schemas the live files were written with, so readers
                 # resolve them from the checkpoint plus the tail only
                 "schemas": {
-                    i: schemas[i]
-                    for i in {a.get("schema_id") for a in files}
-                    if i in schemas
+                    i: snap.schemas[i]
+                    for i in {a.get("schema_id") for a in snap.files}
+                    if i in snap.schemas
                 },
-                # fold DV state so snapshot_dv's backward walk stops
-                # at the checkpoint instead of replaying to v0
-                "dv": snapshot_dv(path, version),
-                # fold the column-mapping so readers replay the tail
+                # the DV and the column mapping, so readers replay the tail
                 # only (same O(CHECKPOINT_EVERY) bound as files)
-                "renames": snapshot_renames(path, version),
+                "dv": snap.dv,
+                "renames": snap.renames,
             }
             # Fold the MONOTONIZED commit timestamp (version_at semantics)
             # so TIMESTAMP AS OF replays only the tail past the newest
@@ -435,54 +455,148 @@ def _commit(
                 json.dump(cp_body, f, default=str)
             os.replace(cp + ".tmp", cp)  # atomic publish
         return version
-    raise RuntimeError(f"commit contention exceeded {max_retries} retries at {path}")
+    raise RuntimeError(f"commit contention exceeded {max_retries} retries at {where}")
+
+
+@dataclass
+class _Snap:
+    """The state at ``version`` of the main log, or of the WAP ``branch``'s
+    log (version None: that log has no entry yet). A branch's snapshot also
+    keeps where its replay started: main's version and live files at the
+    branch's base."""
+
+    version: int | None = None
+    branch: str | None = None
+    base_version: int | None = None
+    base_files: frozenset[str] = frozenset()
+    live: dict[str, dict] = field(default_factory=dict)  # file -> add action
+    schemas: dict[str, str] = field(default_factory=dict)  # schema id -> schema
+    dv: str | None = None  # deletion-vector sidecar in force
+    renames: list[list[str]] = field(default_factory=list)  # [old, new] pairs
+
+    @property
+    def files(self) -> list[dict]:
+        return list(self.live.values())
+
+
+def _fold(snap: _Snap, e: dict) -> None:
+    """Apply one log entry to ``snap``. The newest entry carrying a ``dv``
+    key sets the deletion vector (appends carry none and inherit it,
+    rewrites clear it). Full-rewrite operations materialize the column
+    mapping into the data and reset it (``renames_set``); restore pins the
+    mapping of the restored version."""
+    for rm in e.get("remove", []):
+        snap.live.pop(rm, None)
+    for add in e.get("add", []):
+        snap.live[add["file"]] = add
+    if e.get("schema"):
+        snap.schemas[_schema_id(e["schema"])] = e["schema"]
+    if "dv" in e:
+        snap.dv = e["dv"]
+    if "renames_set" in e:
+        snap.renames = [list(p) for p in e["renames_set"]]
+    snap.renames += [[old, new] for old, new in e.get("renames", {}).items()]
+
+
+def _checkpoint(path: str, version: int) -> tuple[_Snap, int]:
+    """The newest checkpoint at or below ``version`` and the first version
+    after it; without one, an empty snapshot and version 0."""
+    d = _log_dir(path)
+    checkpoints = [
+        int(f[len("_checkpoint-"):-5])
+        for f in os.listdir(d)
+        if f.startswith("_checkpoint-") and f.endswith(".json")
+    ]
+    usable = [v for v in checkpoints if v <= version]
+    if not usable:
+        return _Snap(), 0
+    with open(os.path.join(d, f"_checkpoint-{max(usable):020d}.json")) as f:
+        body = json.load(f)
+    snap = _Snap(
+        live={a["file"]: a for a in body["files"]},
+        schemas=body.get("schemas", {}),
+        dv=body.get("dv"),
+        renames=[list(p) for p in body.get("renames", [])],
+    )
+    return snap, max(usable) + 1
+
+
+def _snapshot(path: str, version: int | None = None, branch: str | None = None) -> _Snap:
+    """Replay the log ONCE into its state at ``version`` (default: the tip):
+    live files, the schema-id -> schema map, the deletion vector and the
+    column mapping. The replay starts from the newest checkpoint at or
+    below ``version`` and folds each tail entry once. A branch is a log
+    whose replay starts from main's snapshot at the branch's base version,
+    the way a tail starts from a checkpoint. An id missing from the schema
+    map (legacy checkpoint, commit logging no schema) makes ``_scan`` fall
+    back to a footer merge."""
+    versions = _list_versions(path, branch)
+    if version is None:
+        version = versions[-1] if versions else None
+    elif version not in versions:
+        raise ValueError(f"unknown version {version} of {path}")
+    if branch is not None:
+        snap, first = _snapshot(path, _branch_meta(path, branch)["base_version"]), 0
+        snap.base_version, snap.base_files = snap.version, frozenset(snap.live)
+    elif version is None:
+        return _Snap()
+    else:
+        snap, first = _checkpoint(path, version)
+    snap.version, snap.branch = version, branch
+    for v in versions:
+        if first <= v <= version:
+            _fold(snap, _read_entry(path, v, branch))
+    return snap
 
 
 def snapshot_files(path: str, version: int | None = None) -> list[dict]:
     """Fold the log into the live file list at ``version`` (default: latest).
     Replays from the newest checkpoint at or below ``version``, then the tail."""
-    return _snapshot(path, version)[0]
+    return _snapshot(path, version).files
 
 
-def _snapshot(path: str, version: int | None = None) -> tuple[list[dict], dict[str, str]]:
-    """``snapshot_files`` plus the schema-id -> schema map of the same replay:
-    the checkpoint's map and every schema the tail logs. An id missing from
-    the map (legacy checkpoint, commit logging no schema) makes ``_scan``
-    fall back to a footer merge."""
-    versions = _list_versions(path)
-    if not versions:
-        return [], {}
-    if version is None:
-        version = versions[-1]
-    if version not in versions:
-        raise ValueError(f"unknown version {version}; have {versions[0]}..{versions[-1]}")
-    d = _log_dir(path)
-    cp_versions = sorted(
-        int(f[len("_checkpoint-"):-5])
-        for f in os.listdir(d)
-        if f.startswith("_checkpoint-") and f.endswith(".json")
-    )
-    live: dict[str, dict] = {}
-    schemas: dict[str, str] = {}
-    start = 0
-    usable = [v for v in cp_versions if v <= version]
-    if usable:
-        with open(os.path.join(d, f"_checkpoint-{usable[-1]:020d}.json")) as f:
-            body = json.load(f)
-        live = {a["file"]: a for a in body["files"]}
-        schemas = body.get("schemas", {})
-        start = usable[-1] + 1
-    for v in versions:
-        if v < start or v > version:
-            continue
-        e = _read_entry(path, v)
-        for rm in e.get("remove", []):
-            live.pop(rm, None)
-        for add in e.get("add", []):
-            live[add["file"]] = add
-        if e.get("schema"):
-            schemas[_schema_id(e["schema"])] = e["schema"]
-    return list(live.values()), schemas
+def snapshot_dv(path: str, version: int | None = None) -> str | None:
+    """The deletion-vector sidecar in force at ``version`` (None when no
+    logical deletes are pending)."""
+    return _snapshot(path, version).dv
+
+
+def snapshot_renames(path: str, version: int | None = None) -> list[list[str]]:
+    """The cumulative column-mapping at ``version``: ordered [old, new]
+    pairs folded from rename_column entries."""
+    return _snapshot(path, version).renames
+
+
+def _log_desc(path: str, version: int | None = None, branch: str | None = None):
+    """Log entries newest first, from ``version`` (default: the tip) down; a
+    branch's own entries run on into main's from the branch's base down."""
+    if branch is not None:
+        for v in reversed(_list_versions(path, branch)):
+            if version is None or v <= version:
+                yield _read_entry(path, v, branch)
+        version = _branch_meta(path, branch)["base_version"]
+    for v in reversed(_list_versions(path)):
+        if version is None or v <= version:
+            yield _read_entry(path, v)
+
+
+def _newest_schema(entries) -> str | None:
+    """The first schema logged among ``entries``, given newest first."""
+    return next((e["schema"] for e in entries if e.get("schema")), None)
+
+
+def _logical_schema(path: str) -> tuple[_Snap, str | None, set[str]]:
+    """The main log's snapshot at the tip, its newest logged schema, and
+    that schema's column names after the column mapping (empty when no
+    schema is logged)."""
+    snap = _snapshot(path)
+    schema = _newest_schema(_log_desc(path, snap.version))
+    names = {f["name"] for f in json.loads(schema)["fields"]} if schema else set()
+    for old, new in snap.renames:
+        if old in names:
+            names.discard(old)
+            names.add(new)
+    return snap, schema, names
 
 
 def _scan(spark: SparkSession, path: str, files: list[dict], schemas: dict[str, str]) -> DataFrame:
@@ -498,72 +612,6 @@ def _scan(spark: SparkSession, path: str, files: list[dict], schemas: dict[str, 
     else:
         reader = spark.read.option("mergeSchema", "true")
     return reader.parquet(*[_data_path(path, a) for a in files])
-
-
-def snapshot_dv(path: str, version: int | None = None) -> str | None:
-    """The deletion-vector sidecar in force at ``version`` (None when no
-    logical deletes are pending). Walks raw log entries backward — the
-    newest entry carrying an explicit ``dv`` key wins; entries without the
-    key inherit (appends don't disturb DVs, rewrites clear them)."""
-    versions = _list_versions(path)
-    if not versions:
-        return None
-    if version is None:
-        version = versions[-1]
-    d = _log_dir(path)
-    cp_versions = sorted(
-        int(f[len("_checkpoint-"):-5])
-        for f in os.listdir(d)
-        if f.startswith("_checkpoint-") and f.endswith(".json")
-    )
-    usable = [v for v in cp_versions if v <= version]
-    floor = usable[-1] if usable else None
-    for v in reversed([x for x in versions if x <= version]):
-        if floor is not None and v < floor:
-            break
-        e = _read_entry(path, v)
-        if "dv" in e:
-            return e["dv"]
-    if floor is not None:
-        with open(os.path.join(d, f"_checkpoint-{floor:020d}.json")) as f:
-            return json.load(f).get("dv")
-    return None
-
-
-def snapshot_renames(path: str, version: int | None = None) -> list[list[str]]:
-    """The cumulative column-mapping at ``version``: ordered [old, new]
-    pairs folded from rename_column entries (checkpoint-accelerated like
-    snapshot_files — readers replay only the tail)."""
-    versions = _list_versions(path)
-    if not versions:
-        return []
-    if version is None:
-        version = versions[-1]
-    d = _log_dir(path)
-    cp_versions = sorted(
-        int(f[len("_checkpoint-"):-5])
-        for f in os.listdir(d)
-        if f.startswith("_checkpoint-") and f.endswith(".json")
-    )
-    out: list[list[str]] = []
-    start = 0
-    usable = [v for v in cp_versions if v <= version]
-    if usable:
-        with open(os.path.join(d, f"_checkpoint-{usable[-1]:020d}.json")) as f:
-            out = [list(p) for p in json.load(f).get("renames", [])]
-        start = usable[-1] + 1
-    for v in versions:
-        if v < start or v > version:
-            continue
-        e = _read_entry(path, v)
-        if "renames_set" in e:
-            # full-rewrite operations (compact/overwrite/zorder/full merge)
-            # materialize the mapping into the data and reset it; restore
-            # pins the mapping of the restored version
-            out = [list(p) for p in e["renames_set"]]
-        for old, new in e.get("renames", {}).items():
-            out.append([old, new])
-    return out
 
 
 def _apply_renames(df: DataFrame, renames: list[list[str]]) -> DataFrame:
@@ -601,23 +649,12 @@ def rename_column(path: str, old: str, new: str) -> int:
     ConcurrentModificationError instead of publishing a rename validated
     against a stale mapping; interleaved appends/deletes don't conflict.
     Callers retry by re-invoking (re-validation is cheap and correct)."""
-    versions = _list_versions(path)
-    assert versions, f"rename_column on a table with no commits: {path}"
-    read_tip = versions[-1]
-    schema = None
-    for v in reversed(versions):
-        schema = _read_entry(path, v).get("schema")
-        if schema:
-            break
+    # pending renames applied, so chained renames validate against the
+    # CURRENT logical schema, not the physical one the last writer recorded
+    snap, schema, names = _logical_schema(path)
+    assert snap.version is not None, f"rename_column on a table with no commits: {path}"
     assert schema, f"no schema recorded at {path}"
     sj = json.loads(schema)
-    names = {f["name"] for f in sj["fields"]}
-    # apply pending renames so chained renames validate against the CURRENT
-    # logical schema, not the physical one the last writer recorded
-    for o, n in snapshot_renames(path):
-        if o in names:
-            names.discard(o)
-            names.add(n)
     if old not in names:
         raise ValueError(f"rename_column: no column {old!r} (have {sorted(names)})")
     if new in names:
@@ -632,7 +669,7 @@ def rename_column(path: str, old: str, new: str) -> int:
             "renames": {old: new},
             "schema": json.dumps(sj),
         },
-        read_version=read_tip,
+        read_version=snap.version,
         conflict_on=("renames", "renames_set"),
     )
 
@@ -650,23 +687,21 @@ def delete_where_dv(spark: SparkSession, path: str, predicate) -> int | None:
     A snapshot without data files has no row to mark: nothing is
     committed and the call returns None."""
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    rv = current_version(path)
-    files = snapshot_files(path, rv)
-    if not files:
+    snap = _snapshot(path)
+    if not snap.live:
         return None
     base = spark.read.option("mergeSchema", "true").parquet(
-        *[_data_path(path, a) for a in files]
+        *[_data_path(path, a) for a in snap.files]
     )
     # predicates are written against LOGICAL (post-rename) column names
-    base = _apply_renames(base, snapshot_renames(path, rv))
+    base = _apply_renames(base, snap.renames)
     fname = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
     new_dv = base.filter(pred).select(
         fname.alias("file"), F.col("_metadata.row_index").alias("pos")
     )
-    prev = snapshot_dv(path, rv)
-    if prev:
+    if snap.dv:
         new_dv = new_dv.unionByName(
-            spark.read.parquet(os.path.join(path, prev))
+            spark.read.parquet(os.path.join(path, snap.dv))
         ).distinct()
     name = f"dv-{uuid.uuid4().hex}"
     # no coalesce(1): the DV is already file-scoped and a broad-predicate
@@ -684,7 +719,7 @@ def delete_where_dv(spark: SparkSession, path: str, predicate) -> int | None:
     return _commit(
         path,
         {"operation": "delete_dv", "dv": name, "dv_rows": n},
-        read_version=rv,
+        read_version=snap.version,
     )
 
 
@@ -721,8 +756,8 @@ class SchemaMismatch(ValueError):
 
 def set_schema_enforcement(path: str, enabled: bool = True) -> None:
     """Delta-style SCHEMA ENFORCEMENT as a table property: when enabled,
-    ``append``/``branch_append`` reject batches whose column names differ
-    from the table's current LOGICAL schema (post-rename) — silent drift
+    ``append`` (to main or to a branch) rejects batches whose column names
+    differ from the table's current LOGICAL schema (post-rename) — silent drift
     (typo'd producers, upstream schema changes) fails loudly at the write
     instead of surfacing as NULL-padded mergeSchema reads. Widening is the
     explicit act of disabling enforcement for the evolving write (the
@@ -739,18 +774,9 @@ def set_schema_enforcement(path: str, enabled: bool = True) -> None:
 def _check_schema_enforcement(df: DataFrame, path: str) -> None:
     if not os.path.exists(os.path.join(_log_dir(path), "_enforce_schema")):
         return
-    schema = None
-    for v in reversed(_list_versions(path)):
-        schema = _read_entry(path, v).get("schema")
-        if schema:
-            break
+    _, schema, names = _logical_schema(path)
     if not schema:
         return
-    names = {f["name"] for f in json.loads(schema)["fields"]}
-    for o, n in snapshot_renames(path):
-        if o in names:
-            names.discard(o)
-            names.add(n)
     got = set(df.columns)
     if got != names:
         raise SchemaMismatch(
@@ -766,46 +792,84 @@ def append(
     stat_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     batch_id: int | None = None,
-) -> int:
-    """``batch_id`` gives exactly-once replay like merge_upsert's ledger: an
-    already-committed id returns the tip without staging anything (the
-    foreachBatch restart window between append and checkpoint commit)."""
-    if batch_id is not None and batch_id in committed_batch_ids(path):
-        return current_version(path)
+    *,
+    branch: str | None = None,
+) -> int | None:
+    """Commit ``df``'s rows as new files and return the new version.
+
+    ``branch`` appends to that WAP branch only (the version returned is the
+    branch's): main readers are unaffected until ``publish_branch``, and
+    since the files are staged into the table directory, the publish is a
+    pure log operation, no data copy.
+
+    ``batch_id`` makes the append exactly-once, like merge_upsert's ledger:
+    a replayed epoch (restart between the sink write and the checkpoint
+    commit) finds its id in the log and returns None without staging
+    anything, instead of doubling rows — the table-format half of
+    Structured Streaming's exactly-once contract. foreachBatch calls are
+    serialized per query, so the check-then-commit window has no concurrent
+    writer for the same id."""
+    if batch_id is not None and batch_id in committed_batch_ids(path, branch=branch):
+        return None
     _check_schema_enforcement(df, path)
-    adds = _stage_files(df, path, stat_cols or [], bloom_cols)
-    actions = {"operation": "append", "add": adds, "schema": df.schema.json()}
+    actions = {
+        "operation": "append" if batch_id is None else "stream-append",
+        "add": _stage_files(df, path, stat_cols or [], bloom_cols),
+        "schema": df.schema.json(),
+    }
     if batch_id is not None:
         actions["batch_id"] = batch_id
-    return _commit(path, actions)
+    return _commit(path, actions, branch=branch)
 
 
-def overwrite(df: DataFrame, path: str, stat_cols: list[str] | None = None) -> int:
-    rv = current_version(path)
-    removes = [a["file"] for a in snapshot_files(path, rv)] if rv is not None else []
-    adds = _stage_files(df, path, stat_cols or [])
-    return _commit(
-        path,
-        {"operation": "overwrite", "add": adds, "remove": removes,
-         "schema": df.schema.json(), "dv": None, "renames_set": []},
-        read_version=rv,
-    )
+def _rewrite(
+    path: str,
+    snap: _Snap,
+    operation: str,
+    df: DataFrame,
+    stat_cols: list[str] | None,
+    batch_id: int | None = None,
+) -> int:
+    """Commit ``df`` as the whole new state of ``snap``'s log: every live
+    file is removed, and since the new rows carry no pending delete and use
+    the logical column names, the deletion vector and the column mapping
+    reset. Raises ConcurrentModificationError when the log has moved past
+    ``snap``."""
+    actions = {
+        "operation": operation,
+        "add": _stage_files(df, path, stat_cols or []),
+        "remove": [a["file"] for a in snap.files],
+        "schema": df.schema.json(),
+        "dv": None,
+        "renames_set": [],
+    }
+    if batch_id is not None:
+        actions["batch_id"] = batch_id
+    return _commit(path, actions, read_version=snap.version, branch=snap.branch)
+
+
+def overwrite(
+    df: DataFrame,
+    path: str,
+    stat_cols: list[str] | None = None,
+    *,
+    branch: str | None = None,
+) -> int:
+    """Replace the snapshot with ``df``'s rows in one commit. ``branch``
+    replaces the branch's snapshot (base files and earlier branch writes);
+    publishing an overwriting branch is conflict-checked against its base
+    version (see publish_branch). A commit that lands between the snapshot
+    and this commit makes it raise ConcurrentModificationError."""
+    return _rewrite(path, _snapshot(path, branch=branch), "overwrite", df, stat_cols)
 
 
 def compact(spark: SparkSession, path: str, stat_cols: list[str] | None = None) -> int:
     """Rewrite the current snapshot as one file per ~128MB (here: coalesced),
     committing adds+removes in a single atomic version — readers of older
     versions are unaffected."""
-    rv = current_version(path)
-    current = snapshot_files(path, rv)
-    df = read(spark, path, version=rv)
-    adds = _stage_files(df.coalesce(max(1, len(current) // 8)), path, stat_cols or [])
-    return _commit(
-        path,
-        {"operation": "compact", "add": adds, "schema": df.schema.json(),
-         "remove": [a["file"] for a in current], "dv": None, "renames_set": []},
-        read_version=rv,
-    )
+    snap = _snapshot(path)
+    df = _read(spark, path, snap)
+    return _rewrite(path, snap, "compact", df.coalesce(max(1, len(snap.live) // 8)), stat_cols)
 
 
 def _parse_commit_ts(e_ts):
@@ -945,6 +1009,8 @@ def read(
     between: tuple[str, object, object] | None = None,
     eq: tuple[str, object] | None = None,
     as_of: object | None = None,
+    *,
+    branch: str | None = None,
 ) -> DataFrame:
     """Read a snapshot. ``between=(col, lo, hi)`` additionally prunes files
     whose footer [min,max] cannot overlap — log-level data skipping; the
@@ -957,50 +1023,43 @@ def read(
     useless. min/max (when logged) and the re-applied filter still back it
     up, so a missing or saturated bloom only costs performance.
     ``as_of`` (datetime or ISO string) is TIMESTAMP AS OF time travel —
-    mutually exclusive with ``version``."""
+    mutually exclusive with ``version``. ``branch`` reads a WAP branch: its
+    base version's data (deletion vector and column mapping included) plus
+    the branch's writes. Branches have no time travel, so ``branch`` with
+    ``version`` or ``as_of`` raises ValueError."""
+    if branch is not None and (version is not None or as_of is not None):
+        raise ValueError("a branch has no time travel: pass branch without version or as_of")
     if as_of is not None:
         if version is not None:
             raise ValueError("pass either version or as_of, not both")
         version = version_at(path, as_of)
-    files, schemas = _snapshot(path, version)
+    return _read(spark, path, _snapshot(path, version, branch), between, eq)
+
+
+def _read(
+    spark: SparkSession,
+    path: str,
+    snap: _Snap,
+    between: tuple[str, object, object] | None = None,
+    eq: tuple[str, object] | None = None,
+) -> DataFrame:
+    """``read`` of a snapshot already replayed."""
+    files = snap.files
     if between is not None:
-        col, lo, hi = between
-        files = [
-            a
-            for a in files
-            if a.get("stats", {}).get(col) is None
-            or _overlaps(a["stats"][col], lo, hi)
-        ]
+        files = [a for a in files if _may_match(a, *between)]
     if eq is not None:
         col, val = eq
-        files = [
-            a
-            for a in files
-            if (
-                a.get("stats", {}).get(col) is None
-                or _overlaps(a["stats"][col], val, val)
-            )
-            and (
-                a.get("bloom", {}).get(col) is None
-                or _bloom_might_contain(a["bloom"][col], val)
-            )
-        ]
+        files = [a for a in files if _may_match(a, col, val, val, eq=True)]
     if not files:
-        schema = None
-        versions = _list_versions(path)
-        for v in reversed(versions if version is None else [x for x in versions if x <= version]):
-            schema = _read_entry(path, v).get("schema")
-            if schema:
-                break
+        schema = _newest_schema(_log_desc(path, snap.version, snap.branch))
         empty = spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
-        return _apply_renames(empty, snapshot_renames(path, version))
-    df = _scan(spark, path, files, schemas)
-    dv = snapshot_dv(path, version)
-    if dv:
-        df = _apply_dv(spark, df, path, dv)
+        return _apply_renames(empty, snap.renames)
+    df = _scan(spark, path, files, snap.schemas)
+    if snap.dv:
+        df = _apply_dv(spark, df, path, snap.dv)
     # column-mapping replay happens BEFORE predicates so between/eq refer to
     # the logical (post-rename) column names
-    df = _apply_renames(df, snapshot_renames(path, version))
+    df = _apply_renames(df, snap.renames)
     if between is not None:
         col, lo, hi = between
         df = df.filter(F.col(col).between(_bound(df, col, lo), _bound(df, col, hi)))
@@ -1027,11 +1086,7 @@ def pruned_file_count(path: str, col: str, lo, hi, version: int | None = None) -
     """(files read with skipping, total files in snapshot) — observability for
     layout quality (sorted/z-ordered tables should prune hard)."""
     files = snapshot_files(path, version)
-    kept = [
-        a for a in files
-        if a.get("stats", {}).get(col) is None or _overlaps(a["stats"][col], lo, hi)
-    ]
-    return len(kept), len(files)
+    return sum(_may_match(a, col, lo, hi) for a in files), len(files)
 
 
 class ConstraintViolation(ValueError):
@@ -1071,20 +1126,12 @@ def _violation_counts(df: DataFrame, checks: dict[str, str]) -> dict[str, int]:
 
 
 def validate_constraints(df: DataFrame, path: str) -> None:
-    """Raise ConstraintViolation if any registered CHECK fails on ``df``."""
+    """Raise ConstraintViolation if any registered CHECK fails on ``df``.
+    Called before ``append``, it rejects a violating batch whole: the
+    constraint scan runs before any file is staged."""
     bad = _violation_counts(df, get_constraints(path))
     if bad:
         raise ConstraintViolation(f"CHECK constraint(s) violated: {bad}")
-
-
-def append_checked(
-    df: DataFrame, path: str, stat_cols: list[str] | None = None
-) -> int:
-    """append() with CHECK enforcement — violating batches are rejected
-    whole (no partial data lands; the constraint scan happens before any
-    file is staged)."""
-    validate_constraints(df, path)
-    return append(df, path, stat_cols)
 
 
 def savepoint(paths: list[str], out_file: str) -> dict[str, int]:
@@ -1123,21 +1170,9 @@ def delete_where(
     (merge_upsert_pruned) applies identically when the predicate is a
     range/key test."""
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    rv = current_version(path)
-    current = snapshot_files(path, rv)
-    keep = read(spark, path, version=rv).filter(~pred)
-    return _commit(
-        path,
-        {
-            "operation": "delete",
-            "add": _stage_files(keep, path, stat_cols or []),
-            "remove": [a["file"] for a in current],
-            "schema": keep.schema.json(),
-            "dv": None,
-            "renames_set": [],
-        },
-        read_version=rv,
-    )
+    snap = _snapshot(path)
+    keep = _read(spark, path, snap).filter(~pred)
+    return _rewrite(path, snap, "delete", keep, stat_cols)
 
 
 def optimize_zorder(
@@ -1157,9 +1192,8 @@ def optimize_zorder(
     stay time-travelable until vacuum."""
     from .operators.layout import cluster_zorder
 
-    rv = current_version(path)
-    current = snapshot_files(path, rv)
-    df = read(spark, path, version=rv)
+    snap = _snapshot(path)
+    df = _read(spark, path, snap)
     bounds = df.agg(
         *[F.min(c).alias(f"lo_{i}") for i, c in enumerate(cols)],
         *[F.max(c).alias(f"hi_{i}") for i, c in enumerate(cols)],
@@ -1169,18 +1203,7 @@ def optimize_zorder(
         for i in range(len(cols))
     ]
     clustered = cluster_zorder(df, cols, ranges, n_files)
-    return _commit(
-        path,
-        {
-            "operation": "optimize",
-            "add": _stage_files(clustered, path, stat_cols or cols),
-            "remove": [a["file"] for a in current],
-            "schema": df.schema.json(),
-            "dv": None,
-            "renames_set": [],
-        },
-        read_version=rv,
-    )
+    return _rewrite(path, snap, "optimize", clustered, stat_cols or cols)
 
 
 def apply_changes(
@@ -1201,9 +1224,8 @@ def apply_changes(
     the stat-pruned refinement applies identically)."""
     if batch_id is not None and batch_id in committed_batch_ids(path):
         return None
-    rv = current_version(path)
-    current = snapshot_files(path, rv)
-    base = read(spark, path, version=rv)
+    snap = _snapshot(path)
+    base = _read(spark, path, snap)
     gone = (
         changes.filter(
             F.col("_change_type").isin("delete", "update_preimage", "update_postimage")
@@ -1217,17 +1239,7 @@ def apply_changes(
     merged = base.join(gone, key_cols, "left_anti").unionByName(
         incoming, allowMissingColumns=True
     )
-    actions = {
-        "operation": "apply_changes",
-        "add": _stage_files(merged, path, stat_cols or []),
-        "remove": [a["file"] for a in current],
-        "schema": merged.schema.json(),
-        "dv": None,
-        "renames_set": [],
-    }
-    if batch_id is not None:
-        actions["batch_id"] = batch_id
-    return _commit(path, actions, read_version=rv)
+    return _rewrite(path, snap, "apply_changes", merged, stat_cols, batch_id)
 
 
 def export_manifest(path: str, out_file: str, version: int | None = None) -> int:
@@ -1237,48 +1249,25 @@ def export_manifest(path: str, out_file: str, version: int | None = None) -> int
     can consume the exact snapshot without understanding the log. Refuses
     when a deletion vector is pending (plain readers cannot apply it —
     compact first to materialize). Returns the number of files listed."""
-    if snapshot_dv(path, version) is not None:
+    snap = _snapshot(path, version)
+    if snap.dv is not None:
         raise ValueError(
             "snapshot has a pending deletion vector; compact() to materialize "
             "before exporting a plain-reader manifest"
         )
-    if snapshot_renames(path, version):
+    if snap.renames:
         # physical column names in pre-rename files differ from the logical
         # schema; a plain reader has no column mapping to reconcile them
         raise ValueError(
             "snapshot has pending column renames; compact() to materialize "
             "the mapping before exporting a plain-reader manifest"
         )
-    files = sorted(
-        os.path.abspath(_data_path(path, a))
-        for a in snapshot_files(path, version)
-    )
+    files = sorted(os.path.abspath(_data_path(path, a)) for a in snap.files)
     tmp = out_file + f".tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
         f.write("\n".join(files) + ("\n" if files else ""))
     os.replace(tmp, out_file)
     return len(files)
-
-
-def pruned_file_count_eq(
-    path: str, col: str, value, version: int | None = None
-) -> tuple[int, int]:
-    """(files read for an equality probe with stat+bloom skipping, total
-    files) — the point-lookup twin of pruned_file_count."""
-    files = snapshot_files(path, version)
-    kept = [
-        a
-        for a in files
-        if (
-            a.get("stats", {}).get(col) is None
-            or _overlaps(a["stats"][col], value, value)
-        )
-        and (
-            a.get("bloom", {}).get(col) is None
-            or _bloom_might_contain(a["bloom"][col], value)
-        )
-    ]
-    return len(kept), len(files)
 
 
 def history(path: str) -> list[dict]:
@@ -1321,24 +1310,12 @@ def merge_upsert(
     plain layouts."""
     if batch_id is not None and batch_id in committed_batch_ids(path):
         return None
-    rv = current_version(path)
-    current = snapshot_files(path, rv)
-    base = read(spark, path, version=rv)
+    snap = _snapshot(path)
+    base = _read(spark, path, snap)
     merged = base.join(updates.select(*key_cols), key_cols, "left_anti").unionByName(
         updates, allowMissingColumns=True
     )
-    adds = _stage_files(merged, path, stat_cols or [])
-    actions = {
-        "operation": "merge",
-        "add": adds,
-        "remove": [a["file"] for a in current],
-        "schema": merged.schema.json(),
-        "dv": None,
-        "renames_set": [],
-    }
-    if batch_id is not None:
-        actions["batch_id"] = batch_id
-    return _commit(path, actions, read_version=rv)
+    return _rewrite(path, snap, "merge", merged, stat_cols, batch_id)
 
 
 # Key types whose collected Python values round-trip exactly into literals
@@ -1396,15 +1373,14 @@ def merge_upsert_pruned(
 
     if batch_id is not None and batch_id in committed_batch_ids(path):
         return None
-    if snapshot_dv(path) is not None:
+    snap = _snapshot(path)
+    if snap.dv is not None:
         # a pending deletion vector references CURRENT file names; a pruned
         # rewrite re-stages touched files from their RAW bytes, which would
         # resurrect DV-deleted rows under new names the DV does not cover.
         # The full merge reads through read() (DV applied) and clears it.
         return merge_upsert(spark, updates, path, key_cols, stat_cols, batch_id)
     key = key_cols[0]
-    rv = current_version(path)
-    files, schemas = _snapshot(path, rv)
     updates = updates.persist()
     try:
         # a batch of at most max_probe_keys rows yields its keys without the
@@ -1452,16 +1428,16 @@ def merge_upsert_pruned(
                     return _overlaps(stat, lo, hi)
 
             touched = [
-                a for a in files
+                a for a in snap.files
                 if a.get("stats", {}).get(key) is None or hits(a["stats"][key])
             ]
         merged = updates
         if touched:
-            base_slice = _scan(spark, path, touched, schemas)
+            base_slice = _scan(spark, path, touched, snap.schemas)
             # pre-rename files carry OLD physical column names; without the
             # replay the key would read as NULL there and matching base rows
             # would survive next to their updates (silent duplicates)
-            base_slice = _apply_renames(base_slice, snapshot_renames(path, rv))
+            base_slice = _apply_renames(base_slice, snap.renames)
             if (
                 probed
                 and len(key_cols) == 1
@@ -1487,7 +1463,7 @@ def merge_upsert_pruned(
     }
     if batch_id is not None:
         actions["batch_id"] = batch_id
-    return _commit(path, actions, read_version=rv)
+    return _commit(path, actions, read_version=snap.version)
 
 
 def merge_upsert_with_retry(
@@ -1523,46 +1499,34 @@ def merge_upsert_with_retry(
     ) from last
 
 
-def committed_batch_ids(path: str) -> set:
-    """Stream batch ids already recorded in the log (exactly-once ledger)."""
+def committed_batch_ids(path: str, *, branch: str | None = None) -> set:
+    """Stream batch ids already recorded in the log, or in ``branch``'s
+    (the exactly-once ledger). A publish carries no batch ids: the squash
+    is one new commit, and the branch ledger dies with the branch."""
     ids = set()
-    for v in _list_versions(path):
-        e = _read_entry(path, v)
+    for v in _list_versions(path, branch):
+        e = _read_entry(path, v, branch)
         if "batch_id" in e:
             ids.add(e["batch_id"])
     return ids
 
 
-def append_batch(
-    df: DataFrame, path: str, batch_id: int, stat_cols: list[str] | None = None
-) -> int | None:
-    """Idempotent append keyed by stream batch id: a replayed epoch (restart
-    between sink write and checkpoint commit) finds its id in the log and
-    becomes a no-op instead of doubling rows — the table-format half of
-    Structured Streaming's exactly-once contract. foreachBatch calls are
-    serialized per query, so the check-then-commit window has no concurrent
-    writer for the same id."""
-    if batch_id in committed_batch_ids(path):
-        return None
-    _check_schema_enforcement(df, path)
-    adds = _stage_files(df, path, stat_cols or [])
-    return _commit(
-        path,
-        {
-            "operation": "stream-append",
-            "batch_id": batch_id,
-            "add": adds,
-            "schema": df.schema.json(),
-        },
-    )
+def stream_writer(
+    path: str, stat_cols: list[str] | None = None, *, branch: str | None = None
+):
+    """``foreachBatch`` callable appending a stream to a tablog table exactly
+    once per batch id (see ``append``):
+    ``stream.writeStream.foreachBatch(tablog.stream_writer(path)).start()``.
 
-
-def stream_writer(path: str, stat_cols: list[str] | None = None):
-    """``foreachBatch`` callable writing a stream into a tablog table:
-    ``stream.writeStream.foreachBatch(tablog.stream_writer(path)).start()``."""
+    With ``branch`` the stream lands in a WAP branch — the blue/green
+    deployment loop for streaming pipelines: a new pipeline version streams
+    into a branch (main readers never see it), quality audits run against
+    the accumulating branch snapshot, and cutover is one atomic
+    ``publish_branch`` — or ``drop_branch`` if the new pipeline misbehaves,
+    with main history untouched either way."""
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        append_batch(batch_df, path, batch_id, stat_cols)
+        append(batch_df, path, stat_cols, batch_id=batch_id, branch=branch)
 
     return _write
 
@@ -1591,15 +1555,15 @@ def read_incremental(
         return None, tip
     if since_version is None:
         return read(spark, path), tip
-    prev = {a["file"] for a in snapshot_files(path, since_version)}
-    now, schemas = _snapshot(path, tip)
-    new_files = [a for a in now if a["file"] not in prev]
+    prev = _snapshot(path, since_version).live
+    now = _snapshot(path, tip)
+    new_files = [a for a in now.files if a["file"] not in prev]
     if not new_files:
         return None, tip
-    df = _scan(spark, path, new_files, schemas)
+    df = _scan(spark, path, new_files, now.schemas)
     # change-feed consumers key on logical names; new files may still
     # predate a rename (e.g. a publish_branch of an older branch)
-    return _apply_renames(df, snapshot_renames(path, tip)), tip
+    return _apply_renames(df, now.renames), tip
 
 
 def restore(path: str, to_version: int) -> int:
@@ -1610,15 +1574,15 @@ def restore(path: str, to_version: int) -> int:
     atomic, conflict-checked log entry (no data is copied or rewritten;
     only membership changes). Requires the restored files to still exist,
     i.e. not vacuumed away."""
-    rv = current_version(path)
-    want = {a["file"]: a for a in snapshot_files(path, to_version)}
-    have = {a["file"] for a in snapshot_files(path, rv)}
+    current = _snapshot(path)
+    target = _snapshot(path, to_version)
+    want, have = target.live, current.live
     # _data_path: clone-referenced entries live in the SOURCE directory
     missing = [f for f, a in want.items() if not os.path.exists(_data_path(path, a))]
     # the target's deletion-vector sidecar is part of the restored state —
     # re-activating a vacuumed DV would make every subsequent read() fail
     # (or, unchecked, silently drop the deletes)
-    dv = snapshot_dv(path, to_version)
+    dv = target.dv
     if dv is not None and not os.path.exists(os.path.join(path, dv)):
         missing.append(dv)
     if missing:
@@ -1631,28 +1595,23 @@ def restore(path: str, to_version: int) -> int:
     schema = _read_entry(path, to_version).get("schema")
     actions = {"operation": "restore", "restored_version": to_version,
                "add": adds, "remove": removes, "dv": dv,
-               "renames_set": snapshot_renames(path, to_version)}
+               "renames_set": target.renames}
     if schema:
         actions["schema"] = schema
-    return _commit(path, actions, read_version=rv)
+    return _commit(path, actions, read_version=current.version)
 
 
 def vacuum(path: str, keep_versions: int = 1) -> list[str]:
     """Delete data files unreferenced by the ``keep_versions`` most recent
     snapshots (bounds time travel; frees compacted-away files). Returns the
-    deleted names. Open WAP branches pin their snapshots (base files + branch
-    writes) — a branch forked before a compact must survive the vacuum that
-    frees the compacted-away base files."""
-    versions = _list_versions(path)
-    keep = versions[-keep_versions:] if versions else []
-    referenced = {a["file"] for v in keep for a in snapshot_files(path, v)}
-    ref_dvs = {snapshot_dv(path, v) for v in keep} - {None}
-    for b in list_branches(path):
-        bfiles, bbase = _branch_snapshot(path, b)
-        referenced |= {a["file"] for a in bfiles}
-        bdv = snapshot_dv(path, bbase)
-        if bdv:
-            ref_dvs.add(bdv)
+    deleted names. Open WAP branches pin their snapshots, read like any
+    other (base files and deletion vector plus the branch's writes) — a
+    branch forked before a compact must survive the vacuum that frees the
+    compacted-away base files."""
+    snaps = [_snapshot(path, v) for v in _list_versions(path)[-keep_versions:]]
+    snaps += [_snapshot(path, branch=b) for b in list_branches(path)]
+    referenced = {f for s in snaps for f in s.live}
+    ref_dvs = {s.dv for s in snaps} - {None}
     deleted = []
     for f in os.listdir(path):
         if f.endswith(".parquet") and f.startswith("part-") and f not in referenced:
@@ -1796,17 +1755,16 @@ def compact_small(
     add+remove version; a pending deletion vector forces the full
     ``compact`` (a partial rewrite would re-stage DV-deleted rows under
     names the DV does not cover)."""
-    rv = current_version(path)
-    files = snapshot_files(path, rv)
-    small = [f for f in files if _file_size(path, f) < small_bytes]
+    snap = _snapshot(path)
+    small = [f for f in snap.files if _file_size(path, f) < small_bytes]
     if len(small) < min_small:
         return None
-    if snapshot_dv(path, rv) is not None:
+    if snap.dv is not None:
         return compact(spark, path, stat_cols)
     df = spark.read.option("mergeSchema", "true").parquet(
         *[_data_path(path, a) for a in small]
     )
-    df = _apply_renames(df, snapshot_renames(path, rv))
+    df = _apply_renames(df, snap.renames)
     # bin-pack toward ~128 MiB outputs: a day of slivers may total many GB
     target = max(1, sum(_file_size(path, a) for a in small) // (128 * 1024 * 1024))
     adds = _stage_files(df.coalesce(target), path, stat_cols or [])
@@ -1817,7 +1775,7 @@ def compact_small(
             "add": adds,
             "remove": [a["file"] for a in small],
         },
-        read_version=rv,
+        read_version=snap.version,
     )
 
 
@@ -1910,39 +1868,18 @@ def scd2_history(
 # publish is all-or-nothing even when the branch accumulated many writes.
 
 
-def _branch_dir(path: str, name: str) -> str:
-    return os.path.join(_log_dir(path), f"_branch-{name}")
-
-
 def _branch_meta(path: str, name: str) -> dict:
-    with open(os.path.join(_branch_dir(path, name), "_base.json")) as f:
+    with open(os.path.join(_log_dir(path, name), "_base.json")) as f:
         return json.load(f)
-
-
-def _branch_versions(path: str, name: str) -> list[int]:
-    d = _branch_dir(path, name)
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        int(f[:-5]) for f in os.listdir(d) if f.endswith(".json") and not f.startswith("_")
-    )
-
-
-def _branch_entries(path: str, name: str) -> list[dict]:
-    d = _branch_dir(path, name)
-    out = []
-    for v in _branch_versions(path, name):
-        with open(os.path.join(d, f"{v:020d}.json")) as f:
-            out.append(json.load(f))
-    return out
 
 
 def branch_create(path: str, name: str) -> int:
     """Fork a branch at the current main tip. Returns the base version the
-    branch reads from; branch writes never touch the main log."""
+    branch reads from; branch writes (``append``/``overwrite``/
+    ``stream_writer`` with ``branch=``) never touch the main log."""
     base = current_version(path)
     assert base is not None, f"branch_create on a table with no commits: {path}"
-    d = _branch_dir(path, name)
+    d = _log_dir(path, name)
     os.makedirs(d, exist_ok=False)
     with open(os.path.join(d, "_base.json"), "w") as f:
         json.dump({"base_version": base, "name": name}, f)
@@ -1958,99 +1895,12 @@ def list_branches(path: str) -> list[str]:
     )
 
 
-def _branch_commit(path: str, name: str, actions: dict) -> int:
-    d = _branch_dir(path, name)
-    for _ in range(20):
-        versions = _branch_versions(path, name)
-        v = (versions[-1] + 1) if versions else 0
-        try:
-            fd = os.open(
-                os.path.join(d, f"{v:020d}.json"),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-            )
-        except FileExistsError:
-            continue
-        with os.fdopen(fd, "w") as f:
-            json.dump(dict(actions, version=v), f, default=str)
-        return v
-    raise RuntimeError(f"branch commit contention at {d}")
-
-
-def _branch_snapshot(path: str, name: str) -> tuple[list[dict], int]:
-    """(live file list, base main version) for a branch: the base snapshot
-    folded with the branch's own add/remove entries."""
-    base = _branch_meta(path, name)["base_version"]
-    live = {a["file"]: a for a in snapshot_files(path, base)}
-    for e in _branch_entries(path, name):
-        for rm in e.get("remove", []):
-            live.pop(rm, None)
-        for add in e.get("add", []):
-            live[add["file"]] = add
-    return list(live.values()), base
-
-
-def branch_append(
-    df: DataFrame, path: str, name: str, stat_cols: list[str] | None = None
-) -> int:
-    """Append to the branch only — main readers are unaffected until
-    publish. Data files are staged into the table directory (collision-proof
-    unique names), so publish later is a pure log operation, no data copy."""
-    _check_schema_enforcement(df, path)
-    adds = _stage_files(df, path, stat_cols or [])
-    return _branch_commit(
-        path, name, {"operation": "append", "add": adds, "schema": df.schema.json()}
-    )
-
-
-def branch_overwrite(
-    df: DataFrame, path: str, name: str, stat_cols: list[str] | None = None
-) -> int:
-    """Replace the branch's snapshot (base files + earlier branch writes).
-    The publish of an overwriting branch is conflict-checked against the
-    base version — see publish_branch."""
-    current, _ = _branch_snapshot(path, name)
-    adds = _stage_files(df, path, stat_cols or [])
-    return _branch_commit(
-        path,
-        name,
-        {
-            "operation": "overwrite",
-            "add": adds,
-            "remove": [a["file"] for a in current],
-            "schema": df.schema.json(),
-        },
-    )
-
-
-def read_branch(spark: SparkSession, path: str, name: str) -> DataFrame:
-    """The branch's current snapshot: base version data (with the base
-    deletion vector still honored) plus branch writes."""
-    files, base = _branch_snapshot(path, name)
-    if not files:
-        # only empty writes (they log no files): the newest logged schema
-        schema = next(
-            (e["schema"] for e in reversed(_branch_entries(path, name)) if e.get("schema")),
-            None,
-        )
-        if schema is None:
-            return read(spark, path, version=base)
-        empty = spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
-        return _apply_renames(empty, snapshot_renames(path, base))
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[_data_path(path, a) for a in files]
-    )
-    dv = snapshot_dv(path, base)
-    if dv:
-        df = _apply_dv(spark, df, path, dv)
-    return _apply_renames(df, snapshot_renames(path, base))
-
-
 def audit_branch(spark: SparkSession, path: str, name: str) -> dict[str, int]:
     """Run the table's CHECK constraints against the FULL branch snapshot
     (one aggregate pass). Returns per-constraint violation counts — empty
     means the branch is publishable. The WAP 'audit' step: it runs where
     the data is still invisible to main readers."""
-    return _violation_counts(read_branch(spark, path, name), get_constraints(path))
+    return _violation_counts(read(spark, path, branch=name), get_constraints(path))
 
 
 def publish_branch(
@@ -2078,33 +1928,26 @@ def publish_branch(
             raise ConstraintViolation(
                 f"publish_branch({name}): CHECK constraint(s) violated: {bad}"
             )
-    files, base = _branch_snapshot(path, name)
-    base_files = {a["file"] for a in snapshot_files(path, base)}
-    live = {a["file"] for a in files}
-    net_add = [a for a in files if a["file"] not in base_files]
-    net_remove = sorted(base_files - live)
-    schema = None
-    for e in reversed(_branch_entries(path, name)):
-        schema = e.get("schema")
-        if schema:
-            break
+    snap = _snapshot(path, branch=name)
     actions: dict = {
         "operation": "publish_branch",
         "branch": name,
-        "base_version": base,
-        "add": net_add,
+        "base_version": snap.base_version,
+        "add": [a for a in snap.files if a["file"] not in snap.base_files],
     }
-    if schema:
-        actions["schema"] = schema
+    if snap.version is not None:
+        # every branch write logs its schema: the newest branch entry has it
+        actions["schema"] = _newest_schema(_log_desc(path, snap.version, name))
+    net_remove = sorted(snap.base_files - set(snap.live))
     if net_remove:
-        # an overwriting branch replaces the base snapshot: stale deletion
-        # vectors over removed files must not survive the publish
-        actions["remove"] = net_remove
-        actions["dv"] = None
-        v = _commit(path, actions, read_version=base)
+        # an overwriting branch replaces the base snapshot, and with it the
+        # deletion vector and column mapping it reset: stale ones must not
+        # survive the publish
+        actions.update(remove=net_remove, dv=snap.dv, renames_set=snap.renames)
+        v = _commit(path, actions, read_version=snap.base_version)
     else:
         v = _commit(path, actions)
-    shutil.rmtree(_branch_dir(path, name))
+    shutil.rmtree(_log_dir(path, name))
     return v
 
 
@@ -2112,80 +1955,18 @@ def drop_branch(path: str, name: str) -> list[str]:
     """Abandon a branch: delete its log and the data files only it
     references (base files stay — main history owns them). The failing-audit
     exit of the WAP loop."""
-    base_files = {
-        a["file"]
-        for a in snapshot_files(path, _branch_meta(path, name)["base_version"])
-    }
+    base_files = _snapshot(path, branch=name).base_files
     deleted = []
-    for e in _branch_entries(path, name):
-        for add in e.get("add", []):
+    # every file a branch entry added, also those a later branch overwrite
+    # removed from the branch's snapshot
+    for v in _list_versions(path, name):
+        for add in _read_entry(path, v, name).get("add", []):
             f = add["file"]
             if f not in base_files and os.path.exists(os.path.join(path, f)):
                 os.remove(os.path.join(path, f))
                 deleted.append(f)
-    shutil.rmtree(_branch_dir(path, name))
+    shutil.rmtree(_log_dir(path, name))
     return deleted
-
-
-def branch_committed_batch_ids(path: str, name: str) -> set:
-    """Stream batch ids already recorded in the BRANCH log (the branch half
-    of the exactly-once ledger; publish carries no batch ids — the squash
-    is a single new commit and the branch ledger dies with the branch)."""
-    return {e["batch_id"] for e in _branch_entries(path, name) if "batch_id" in e}
-
-
-def branch_append_batch(
-    df: DataFrame,
-    path: str,
-    name: str,
-    batch_id: int,
-    stat_cols: list[str] | None = None,
-) -> int | None:
-    """Idempotent branch append keyed by stream batch id — ``append_batch``
-    for a WAP branch: a replayed epoch (restart between sink write and
-    checkpoint commit) is a no-op instead of doubling branch rows."""
-    if batch_id in branch_committed_batch_ids(path, name):
-        return None
-    _check_schema_enforcement(df, path)
-    adds = _stage_files(df, path, stat_cols or [])
-    return _branch_commit(
-        path,
-        name,
-        {
-            "operation": "stream-append",
-            "batch_id": batch_id,
-            "add": adds,
-            "schema": df.schema.json(),
-        },
-    )
-
-
-def branch_stream_writer(path: str, name: str, stat_cols: list[str] | None = None):
-    """``foreachBatch`` callable streaming into a WAP BRANCH — the blue/green
-    deployment loop for streaming pipelines: a new pipeline version streams
-    into a branch (main readers never see it), quality audits run against the
-    accumulating branch snapshot, and cutover is one atomic
-    ``publish_branch`` — or ``drop_branch`` if the new pipeline misbehaves,
-    with main history untouched either way."""
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        branch_append_batch(batch_df, path, name, batch_id, stat_cols)
-
-    return _write
-
-
-def register_view(
-    spark: SparkSession,
-    path: str,
-    name: str,
-    version: int | None = None,
-) -> None:
-    """Expose a tablog snapshot to ``spark.sql`` as a temp view (latest by
-    default, or a pinned time-travel version) — the ad-hoc SQL entry point
-    over versioned tables, with deletion vectors and column mapping already
-    applied. Re-registering the same name repoints it (e.g. after new
-    commits, or to flip a dashboard between versions)."""
-    read(spark, path, version=version).createOrReplaceTempView(name)
 
 
 def clone_table(src: str, dst: str) -> int:
@@ -2206,26 +1987,21 @@ def clone_table(src: str, dst: str) -> int:
     still reference the dropped files — compact the clone first to detach.
     The source's folded column mapping is pinned into the clone at creation.
     """
-    rv = current_version(src)
-    assert rv is not None, f"clone_table from a table with no commits: {src}"
-    if snapshot_dv(src, rv) is not None:
+    snap = _snapshot(src)
+    assert snap.version is not None, f"clone_table from a table with no commits: {src}"
+    if snap.dv is not None:
         raise ValueError(
             "source has a pending deletion vector; compact() it before "
             "cloning (the DV sidecar is not portable across tables)"
         )
     src_abs = os.path.abspath(src)
-    adds = [dict(a, dir=src_abs) for a in snapshot_files(src, rv)]
-    schema = None
-    for v in reversed(_list_versions(src)):
-        schema = _read_entry(src, v).get("schema")
-        if schema:
-            break
+    schema = _newest_schema(_log_desc(src, snap.version))
     actions = {
         "operation": "clone",
         "source": src_abs,
-        "source_version": rv,
-        "add": adds,
-        "renames_set": snapshot_renames(src, rv),
+        "source_version": snap.version,
+        "add": [dict(a, dir=src_abs) for a in snap.files],
+        "renames_set": snap.renames,
     }
     if schema:
         actions["schema"] = schema

@@ -105,7 +105,7 @@ def test_stream_append_exactly_once(spark, tmp_path, events_dir):
     assert ids
     replay_id = sorted(ids)[0]
     some = T.read(spark, tbl).limit(5)
-    assert T.append_batch(some, tbl, replay_id) is None
+    assert T.append(some, tbl, batch_id=replay_id) is None
     assert T.read(spark, tbl).count() == n
     ops = {h["operation"] for h in T.history(tbl)}
     assert ops == {"stream-append"}

@@ -470,20 +470,18 @@ def test_merge_upsert_with_retry_rebases_on_moved_tip(spark, sf_dir, tbl, monkey
     )
     racing = o.filter(~F.col("o_orderkey").isin(base_keys)).limit(5)
 
-    real_cv = T.current_version
+    real_stage = T._stage_files
     state = {"fired": False}
 
-    def racy_cv(path):
-        # first snapshot read returns a tip that immediately goes stale:
-        # the racing append commits between our read and our commit
+    def racy_stage(df, path, *args, **kwargs):
+        # the first merge attempt has read its snapshot; the racing append
+        # commits while it stages, between its read and its commit
         if not state["fired"]:
             state["fired"] = True
-            v = real_cv(path)
             T.append(racing, tbl)
-            return v
-        return real_cv(path)
+        return real_stage(df, path, *args, **kwargs)
 
-    monkeypatch.setattr(T, "current_version", racy_cv)
+    monkeypatch.setattr(T, "_stage_files", racy_stage)
     v = T.merge_upsert_with_retry(spark, upd, tbl, key_cols=["o_orderkey"])
     assert isinstance(v, int)
 
@@ -739,13 +737,13 @@ def test_bloom_skipping_equality_probe(spark, sf_dir, tbl):
         for r in o.filter(F.col("o_orderkey").between(mid, mid + 100)).limit(40).collect()
     ]
     assert len(keys) >= 10
+    assert len(T.snapshot_files(tbl)) == 4
     total_kept = 0
     for k in keys[:10]:
-        kept, total = T.pruned_file_count_eq(tbl, "o_orderkey", k)
-        assert total == 4
+        got = T.read(spark, tbl, eq=("o_orderkey", k))
+        kept = len(got.inputFiles())
         assert kept >= 1  # no false negative: the holding file always survives
         total_kept += kept
-        got = T.read(spark, tbl, eq=("o_orderkey", k))
         want = o.filter(F.col("o_orderkey") == k)
         assert got.count() == want.count() > 0
         assert got.exceptAll(want).count() == 0
@@ -910,16 +908,19 @@ def test_check_constraints_reject_bad_batches(spark, sf_dir, tbl):
         },
     )
     # clean batch passes
-    v = T.append_checked(o.limit(5), tbl)
+    T.validate_constraints(o.limit(5), tbl)
+    v = T.append(o.limit(5), tbl)
     assert v == 1
     # violating batch rejected WHOLE, no partial commit
     bad = o.limit(3).withColumn("o_totalprice", F.lit(-1.0))
     with pytest.raises(T.ConstraintViolation, match="positive_price"):
-        T.append_checked(bad, tbl)
+        T.validate_constraints(bad, tbl)
+        T.append(bad, tbl)
     assert T.current_version(tbl) == 1
     # NULL passes (ANSI CHECK semantics)
     nullish = o.limit(2).withColumn("o_totalprice", F.lit(None).cast("double"))
-    assert T.append_checked(nullish, tbl) == 2
+    T.validate_constraints(nullish, tbl)
+    assert T.append(nullish, tbl) == 2
 
 
 def test_savepoint_consistent_multi_table_read(spark, sf_dir, tbl, tmp_path):
@@ -1087,9 +1088,9 @@ def test_wap_branch_isolated_then_published(spark, sf_dir, tbl):
     T.set_constraints(tbl, {"price_pos": "o_totalprice > 0"})
     T.branch_create(tbl, "etl")
     assert T.list_branches(tbl) == ["etl"]
-    T.branch_append(o.limit(150).exceptAll(o.limit(100)), tbl, "etl")
+    T.append(o.limit(150).exceptAll(o.limit(100)), tbl, branch="etl")
     # branch sees base + writes; main is untouched until publish
-    assert T.read_branch(spark, tbl, "etl").count() == 150
+    assert T.read(spark, tbl, branch="etl").count() == 150
     assert T.read(spark, tbl).count() == 100
     assert T.audit_branch(spark, tbl, "etl") == {}
     v = T.publish_branch(spark, tbl, "etl")
@@ -1104,8 +1105,8 @@ def test_wap_audit_rejects_bad_branch_main_untouched(spark, sf_dir, tbl):
     T.create_table(o.limit(20), tbl)
     T.set_constraints(tbl, {"price_pos": "o_totalprice > 0"})
     T.branch_create(tbl, "bad")
-    T.branch_append(
-        o.limit(5).withColumn("o_totalprice", F.lit(-1.0)), tbl, "bad"
+    T.append(
+        o.limit(5).withColumn("o_totalprice", F.lit(-1.0)), tbl, branch="bad"
     )
     tip_before = T.current_version(tbl)
     with pytest.raises(T.ConstraintViolation):
@@ -1123,7 +1124,7 @@ def test_wap_append_only_branch_fast_forwards_over_moved_tip(spark, sf_dir, tbl)
     T.create_table(o.limit(10), tbl)
     T.branch_create(tbl, "ff")
     branch_rows = o.limit(40).exceptAll(o.limit(30))
-    T.branch_append(branch_rows, tbl, "ff")
+    T.append(branch_rows, tbl, branch="ff")
     # main advances independently while the branch is open
     T.append(o.limit(20).exceptAll(o.limit(10)), tbl)
     T.publish_branch(spark, tbl, "ff")
@@ -1134,7 +1135,7 @@ def test_wap_overwriting_branch_conflicts_on_moved_tip(spark, sf_dir, tbl):
     o = _orders(spark, sf_dir)
     T.create_table(o.limit(10), tbl)
     T.branch_create(tbl, "rw")
-    T.branch_overwrite(o.limit(5), tbl, "rw")
+    T.overwrite(o.limit(5), tbl, branch="rw")
     T.append(o.limit(20).exceptAll(o.limit(10)), tbl)  # tip moves
     with pytest.raises(T.ConcurrentModificationError):
         T.publish_branch(spark, tbl, "rw")
@@ -1146,12 +1147,12 @@ def test_wap_vacuum_keeps_open_branch_files(spark, sf_dir, tbl):
     o = _orders(spark, sf_dir)
     T.create_table(o.limit(100), tbl)
     T.branch_create(tbl, "slow")
-    T.branch_append(o.limit(110).exceptAll(o.limit(100)), tbl, "slow")
+    T.append(o.limit(110).exceptAll(o.limit(100)), tbl, branch="slow")
     # main compacts + vacuums aggressively while the branch is open: the
     # branch's base files leave main's recent snapshots but must survive
     T.compact(spark, tbl)
     T.vacuum(tbl, keep_versions=1)
-    assert T.read_branch(spark, tbl, "slow").count() == 110
+    assert T.read(spark, tbl, branch="slow").count() == 110
     # append-only branch still publishes over the compacted tip
     T.publish_branch(spark, tbl, "slow")
     assert T.read(spark, tbl).count() == 110
@@ -1275,14 +1276,14 @@ def test_wap_branch_stream_writer_exactly_once_then_publish(spark, sf_dir, tbl):
     T.create_table(o.limit(10), tbl)
     T.set_constraints(tbl, {"price_pos": "o_totalprice > 0"})
     T.branch_create(tbl, "v2")
-    write = T.branch_stream_writer(tbl, "v2")
+    write = T.stream_writer(tbl, branch="v2")
     b1 = o.limit(20).exceptAll(o.limit(10))
     b2 = o.limit(30).exceptAll(o.limit(20))
     write(b1, 0)
     write(b2, 1)
     write(b2, 1)  # replayed epoch (restart between write and checkpoint)
-    assert T.branch_committed_batch_ids(tbl, "v2") == {0, 1}
-    assert T.read_branch(spark, tbl, "v2").count() == 30  # no doubling
+    assert T.committed_batch_ids(tbl, branch="v2") == {0, 1}
+    assert T.read(spark, tbl, branch="v2").count() == 30  # no doubling
     assert T.read(spark, tbl).count() == 10  # main untouched mid-stream
     assert T.audit_branch(spark, tbl, "v2") == {}
     T.publish_branch(spark, tbl, "v2")
@@ -1293,8 +1294,8 @@ def test_register_view_sql_over_versions(spark, sf_dir, tbl):
     o = _orders(spark, sf_dir).select("o_orderkey", "o_totalprice")
     T.create_table(o.limit(10), tbl)
     T.append(o.limit(20).exceptAll(o.limit(10)), tbl)
-    T.register_view(spark, tbl, "tl_now")
-    T.register_view(spark, tbl, "tl_v0", version=0)
+    T.read(spark, tbl).createOrReplaceTempView("tl_now")
+    T.read(spark, tbl, version=0).createOrReplaceTempView("tl_v0")
     assert spark.sql("SELECT COUNT(*) c FROM tl_now").first()["c"] == 20
     assert spark.sql("SELECT COUNT(*) c FROM tl_v0").first()["c"] == 10
     spark.catalog.dropTempView("tl_now")
@@ -1428,7 +1429,7 @@ def test_model_based_random_op_sequences(spark, tmp_path):
             elif op == "wap":
                 T.branch_create(path, "b")
                 new = fresh_rows(rng.randint(1, 3))
-                T.branch_append(df_of(new, cols), path, "b")
+                T.append(df_of(new, cols), path, branch="b")
                 assert T.read(spark, path).count() == len(rows)  # isolation
                 T.publish_branch(spark, path, "b")
                 rows = rows + new
@@ -2160,11 +2161,11 @@ def test_empty_append_batch_logs_no_file(spark, tbl):
     files_before = T.snapshot_files(tbl)
     assert all(a["rows"] > 0 for a in files_before)
     assert sum(a["rows"] for a in files_before) == 3
-    v = T.append_batch(df.filter("id < 0"), tbl, batch_id=7)
+    v = T.append(df.filter("id < 0"), tbl, batch_id=7)
     entry = T._read_entry(tbl, v)
     assert entry["add"] == [] and entry["batch_id"] == 7
     assert 7 in T.committed_batch_ids(tbl)
-    assert T.append_batch(df.filter("id < 0"), tbl, batch_id=7) is None
+    assert T.append(df.filter("id < 0"), tbl, batch_id=7) is None
     assert T.current_version(tbl) == v
     assert T.snapshot_files(tbl) == files_before
     assert T.read(spark, tbl).count() == 3
@@ -2175,6 +2176,73 @@ def test_empty_append_batch_logs_no_file(spark, tbl):
     got = T.read(spark, empty)
     assert got.count() == 0 and got.schema == df.schema
     T.branch_create(empty, "etl")
-    T.branch_append(df.filter("id < 0"), empty, "etl")
-    branch = T.read_branch(spark, empty, "etl")
+    T.append(df.filter("id < 0"), empty, branch="etl")
+    branch = T.read(spark, empty, branch="etl")
     assert branch.count() == 0 and branch.columns == df.columns
+
+
+def test_branch_read_takes_schema_from_log_without_jobs(spark, tbl):
+    """A branch reads like main: base files and branch writes that share
+    one logged schema are read with it, without a footer-merge job.
+    Branches have no time travel."""
+    df = spark.range(4, numPartitions=1).selectExpr("id", "'x' AS s")
+    T.create_table(df, tbl)
+    T.branch_create(tbl, "etl")
+    T.append(df, tbl, branch="etl")
+    got, n_jobs = _jobs_started(spark, lambda: T.read(spark, tbl, branch="etl"))
+    assert n_jobs == 0
+    assert got.schema == _merged_read(spark, tbl).schema
+    assert got.count() == 8
+    with pytest.raises(ValueError, match="time travel"):
+        T.read(spark, tbl, version=0, branch="etl")
+
+
+def test_read_replays_each_tail_entry_once(spark, tbl):
+    """One read lists the log once and reads each entry past the
+    checkpoint once, whatever the tail holds (a deletion vector and a
+    rename here): files, schemas, the DV and the column mapping come from
+    one replay."""
+    from unittest import mock
+
+    df = spark.range(4, numPartitions=1).selectExpr("id", "'x' AS s")
+    T.create_table(df, tbl)
+    for _ in range(T.CHECKPOINT_EVERY):
+        T.append(df, tbl)
+    for _ in range(6):
+        T.append(df, tbl)
+    T.delete_where_dv(spark, tbl, "id = 0")
+    T.rename_column(tbl, "s", "t")
+    tip = T.current_version(tbl)
+    assert tip == T.CHECKPOINT_EVERY + 8
+    with mock.patch.object(T, "_read_entry", side_effect=T._read_entry) as reads, \
+            mock.patch.object(T, "_list_versions", side_effect=T._list_versions) as lists:
+        got = T.read(spark, tbl)
+    assert reads.call_count <= 8, reads.call_count
+    assert lists.call_count == 1, lists.call_count
+    assert got.columns == ["id", "t"]
+    assert got.count() == 3 * (T.CHECKPOINT_EVERY + 7)
+
+
+def test_branch_overwrite_racing_branch_append_conflicts(spark, tbl, monkeypatch):
+    """A branch overwrite commits against the branch tip it read: a branch
+    append landing between its snapshot and its commit makes it raise
+    ConcurrentModificationError instead of dropping the appended rows."""
+    df = spark.range(5, numPartitions=1).selectExpr("id")
+    T.create_table(df, tbl)
+    T.branch_create(tbl, "rw")
+    real_stage = T._stage_files
+    fired = []
+
+    def racing_stage(*a, **k):
+        if not fired:
+            fired.append(True)
+            T.append(spark.range(100, 103, numPartitions=1), tbl, branch="rw")
+        return real_stage(*a, **k)
+
+    monkeypatch.setattr(T, "_stage_files", racing_stage)
+    with pytest.raises(T.ConcurrentModificationError):
+        T.overwrite(spark.range(2, numPartitions=1), tbl, branch="rw")
+    monkeypatch.undo()
+    assert fired
+    assert T.read(spark, tbl, branch="rw").count() == 8  # the raced append survived
+    assert T.read(spark, tbl).count() == 5
